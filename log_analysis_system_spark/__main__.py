@@ -68,11 +68,14 @@ def build_arg_parser() -> argparse.ArgumentParser:
 def _ingest_feed(spark, reader, parts, output_dir, kind: str):
     """Shared (turns, rejects) ingest policy for the JSONL/CSV front
     doors: route rejects to <output>/rejects_<kind>, or — with no output
-    dir — surface that rows were dropped without a second full scan."""
+    dir — surface that rows were dropped.
+
+    The feed is scanned twice: once here for its rejects, and once more
+    when the pipeline reads the returned ``turns``."""
     turns, rejects = reader(spark, parts)
     if output_dir:
         # one write job, no eager pre-count (a rejects.count() here would
-        # be a second full scan of the feed); the row count afterwards
+        # be a third full scan of the feed); the row count afterwards
         # reads only parquet footers
         rej_dir = os.path.join(output_dir, f"rejects_{kind}")
         rejects.write.mode("overwrite").parquet(rej_dir)
@@ -83,8 +86,7 @@ def _ingest_feed(spark, reader, parts, output_dir, kind: str):
                   file=sys.stderr)
     elif rejects.take(1):
         # no sink to capture them: still surface the drop (take(1)
-        # short-circuits; the clean-feed case costs one scan either way,
-        # which the old count-and-warn also paid)
+        # stops at the first reject; a clean feed is scanned in full)
         print(f"{kind} ingest: feed has rejected rows (malformed or "
               "missing conv_id) and no output dir to capture them — "
               "pass output_dir to write the rejects sink",

@@ -6,13 +6,16 @@ engineering the north rule demands:
 
 - **bucketing**: facts are hashed into ``n_buckets`` by ``conv_id``
   (``pmod(xxhash64(conv_id), n)``) — the unit of lineage, resume, and sink
-  partitioning (Iceberg ``bucket(n, conv_id)`` on a real cluster);
+  partitioning (Iceberg ``bucket(n, conv_id)`` on a real cluster). Buckets
+  are not tasks: the route runs ``min(n_buckets, cores)`` tasks, bucket
+  ``b`` placed exactly on task ``b mod tasks``, each task holding whole
+  buckets;
 - **two checkpointable stages** with different recovery granularity:
 
   * ``route`` (per-bucket, resumable bucket-by-bucket): parse + enrich +
     per-ROW detectors (attack/scan patterns — embarrassingly parallel),
-    fanned out to parsed/error/reject sinks and per-severity event sinks,
-    one persisted frame feeding every sink;
+    fanned out to parsed/error/reject sinks and to each detector's
+    severity sink, one persisted frame feeding every sink;
   * ``aggregate`` (global, all-or-nothing): reads BACK the completed
     parsed_turns sink (never recomputes parse) and runs the group-by
     detectors (suspicious IP / brute force / unusual method — global by
@@ -128,7 +131,14 @@ def run_pipeline(
     agg_done = st.completed_buckets(spark, output_dir, run_id, "aggregate")
     if resume and -1 in agg_done:
         return result
-    _aggregate_stage(spark, output_dir, run_id, result, n_buckets, cfg)
+    # rows the route wrote to parsed_turns: this call's own count, or the
+    # state table's when resume skipped some buckets
+    parsed_rows = (
+        st.recorded_rows(spark, output_dir, run_id, "route")
+        if result.buckets_skipped
+        else result.sink_counts["parsed_turns"]
+    )
+    _aggregate_stage(spark, output_dir, run_id, result, n_buckets, cfg, parsed_rows)
     result.aggregate_ran = True
     return result
 
@@ -157,17 +167,20 @@ def _route_stage(
 ) -> None:
     with st.StageTimer() as t:
         # ONE shuffle into bucket layout BEFORE the parse: raw turns are the
-        # narrowest the rows ever are (cheapest point to shuffle), parse
-        # parallelism is decoupled from the source file layout, and every
-        # downstream sink write is narrow and bucket-aligned (<=1 file per
-        # bucket per sink — the parquet analog of Iceberg
-        # bucket(n, conv_id)). The bucket is the unit of parallelism,
-        # lineage, and resume.
-        bucketed = bucketed.repartition(n_buckets, "bucket")
+        # narrowest the rows ever are (cheapest point to shuffle) and parse
+        # parallelism is decoupled from the source file layout. Bucket b
+        # lands on task b mod n exactly, n = min(n_buckets, cores): each
+        # task holds whole buckets, so every downstream sink write is narrow
+        # and writes one file per bucket (the parquet analog of Iceberg
+        # bucket(n, conv_id)) while the task count follows the cores. The
+        # bucket is the unit of lineage, resume and files, not of tasks.
+        n_tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
+        bucketed = bucketed.repartitionById(n_tasks, "bucket")
         enriched = enrich(parse_transcripts(bucketed, engine=parse_engine, cfg=cfg))
         enriched.persist(StorageLevel.MEMORY_AND_DISK)
 
         # one grouped-count job covers parsed/error/reject lineage metrics
+        # and fills enriched's cache before the concurrent fan-out
         cat = (
             F.when(F.col("log_type") == "access", F.lit("parsed_turns"))
             .when(F.col("log_type") == "error", F.lit("error_turns"))
@@ -193,22 +206,21 @@ def _route_stage(
         rejects = enriched.where(F.col("log_format").isNull()).select(
             "bucket", "conv_id", "turn_idx", "role", "tool", "ts", "text"
         )
-        # per-row detectors only (global detectors run in the aggregate
-        # stage); bucket survives from the enriched frame's layout
-        row_events = (
-            sec.attack_events(enriched, cfg)
-            .unionByName(sec.scan_events(enriched, cfg))
-            .withColumn("bucket", _bucket("conv_id", n_buckets))
-        )
-        row_events.persist(StorageLevel.MEMORY_AND_DISK)
-        sev_counts: dict[str, int] = {}
-        for r in row_events.groupBy("severity").agg(F.count("*").alias("cnt")).collect():
-            sev_counts[r["severity"]] = r["cnt"]
 
-        # Every sink below reads only the two persisted frames (both fully
-        # materialized by the count jobs above), so the six writes are
-        # independent Spark actions — submit them concurrently and let the
-        # scheduler interleave; each writes a distinct sink_counts key.
+        # per-row detectors only (global detectors run in the aggregate
+        # stage). Attack patterns are always high severity and scans always
+        # medium, so each feeds its own sink; no row detector emits low.
+        def row_events(name: str, events: DataFrame) -> None:
+            result.sink_counts[name] = _write_observed(
+                events.withColumn("bucket", _bucket("conv_id", n_buckets)),
+                output_dir, name, partition_cols=["bucket"],
+                mode="overwrite_partitions",
+            )
+
+        # Every sink below reads only the persisted frame, so the five
+        # writes are independent Spark actions — submit them concurrently
+        # and let the scheduler interleave; each writes a distinct
+        # sink_counts key.
         try:
             with ThreadPoolExecutor(max_workers=_sink_concurrency()) as pool:
                 futures = [
@@ -218,25 +230,19 @@ def _route_stage(
                                 "error_turns", total("error_turns")),
                     pool.submit(_sink, result, rejects, output_dir,
                                 "rejects", total("rejects")),
-                ]
-                futures += [
-                    pool.submit(
-                        _sink,
-                        result,
-                        row_events.where(F.col("severity") == severity),
-                        output_dir,
-                        name,
-                        sev_counts.get(severity, 0),
-                    )
-                    for severity, name in ROW_SINKS_BY_SEVERITY.items()
+                    pool.submit(row_events, ROW_SINKS_BY_SEVERITY["high"],
+                                sec.attack_events(enriched, cfg)),
+                    pool.submit(row_events, ROW_SINKS_BY_SEVERITY["medium"],
+                                sec.scan_events(enriched, cfg)),
                 ]
                 for f in futures:
                     f.result()  # re-raises the first failure
         finally:
             # always drop the cache blocks — a failed concurrent sink write
             # must not leak MEMORY_AND_DISK blocks for the session lifetime
-            row_events.unpersist()
             enriched.unpersist()
+        # an empty dynamic-partition overwrite replaces nothing: skip it
+        result.sink_counts[ROW_SINKS_BY_SEVERITY["low"]] = 0
 
     st.append_state(
         spark,
@@ -247,12 +253,18 @@ def _route_stage(
     )
 
 
-def _write_observed(df: DataFrame, output_dir: str, name: str) -> int:
-    """Full-overwrite write with the row count observed INSIDE the write job
-    (no separate count pass)."""
+def _write_observed(
+    df: DataFrame,
+    output_dir: str,
+    name: str,
+    partition_cols: list[str] | None = None,
+    mode: str = "overwrite",
+) -> int:
+    """Write with the row count observed INSIDE the write job (no separate
+    count pass); full overwrite unless ``mode`` says otherwise."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    catalog.write_table(df, output_dir, name, mode="overwrite")
+    catalog.write_table(df, output_dir, name, partition_cols=partition_cols, mode=mode)
     return int(obs.get["n"])
 
 
@@ -263,13 +275,17 @@ def _aggregate_stage(
     result: PipelineResult,
     n_buckets: int,
     cfg: RuntimeConfig = DEFAULT_CONFIG,
+    parsed_rows: int | None = None,
 ) -> None:
     # A route stage whose every row was rejected writes zero parsed_turns
     # rows — and a bucket-partitioned write of an empty frame emits no
     # schema-bearing part files at all, so the sink dir is unreadable.
     # Nothing to aggregate: record the stage as done with zero counts
-    # instead of crashing the run.
-    if not catalog.table_exists(spark, output_dir, "parsed_turns"):
+    # instead of crashing the run. The skip keys on the route's own count,
+    # never on a probe of the sink: a probe that fails transiently must not
+    # record a permanently-done empty aggregate. ``None`` (analyze-only,
+    # whose caller already found the sink) always aggregates.
+    if parsed_rows == 0:
         st.append_state(
             spark,
             output_dir,

@@ -78,6 +78,23 @@ def completed_buckets(
     return {r.bucket for r in rows}
 
 
+def recorded_rows(spark: SparkSession, base_dir: str, run_id: str, stage: str) -> int:
+    """Rows a run's completed ``stage`` buckets recorded, each bucket once.
+    Reads the state table without an existence probe: callers ask only
+    after ``completed_buckets`` found rows, so a failed read is loud."""
+    st = catalog.read_table(spark, base_dir, "state_metrics")
+    per_bucket = (
+        st.where(
+            (F.col("run_id") == run_id)
+            & (F.col("stage") == stage)
+            & (F.col("status") == "done")
+        )
+        .groupBy("bucket")
+        .agg(F.max("row_count").alias("n"))
+    )
+    return int(per_bucket.agg(F.sum("n")).collect()[0][0] or 0)
+
+
 def bucket_counts(df: DataFrame, bucket_col: str = "bucket") -> dict[int, int]:
     """Per-bucket row counts for lineage metrics (one extra pass over the
     already-persisted frame)."""

@@ -120,7 +120,11 @@ def read_transcript_stream_csv(
     batch ``sources.csvfile`` null-vs-empty encoding). multiLine stays
     FALSE here: a streaming file source should be splittable, so this
     door requires newline-free ``text`` per record — feeds with embedded
-    newlines belong on the JSONL door, which encodes them natively."""
+    newlines belong on the JSONL door, which encodes them natively.
+
+    Every drop file needs a header row: the first line of each file is
+    read as the header, so a headerless file silently loses its first
+    record."""
     from ..sources.csvfile import _NULL_TOKEN, _TS_FMT, CSV_SCHEMA
 
     raw = (

@@ -3,6 +3,8 @@ idempotence (SURVEY §5 rebuild test plan layer 3)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,6 +78,50 @@ def test_pipeline_fanout_counts(spark, transcripts, tmp_path_factory):
     assert state_by_bucket == {
         b: sink_by_bucket.get(b, 0) for b in range(8)
     }
+
+    # 8 buckets on local[4]: each route task holds two whole buckets, so
+    # every bucket dir of every route sink still gets exactly one file
+    for sink in ("parsed_turns", "error_turns", "rejects",
+                 "security_events_high", "security_events_medium"):
+        files = {
+            d: [f for f in os.listdir(out / sink / d)
+                if not f.startswith(("_", "."))]
+            for d in os.listdir(out / sink) if d.startswith("bucket=")
+        }
+        assert files, sink
+        assert all(len(fs) == 1 for fs in files.values()), (sink, files)
+    assert not (out / "security_events_low").exists()
+    assert res.sink_counts["security_events_low"] == 0
+
+
+def test_aggregate_skip_ignores_failed_sink_probe(
+    spark, transcripts, tmp_path_factory, monkeypatch
+):
+    """``table_exists`` answers False on any filesystem or parquet error. A
+    probe of parsed_turns that fails on a run with data must not record a
+    done aggregate with zero counts — neither when the route ran in the
+    same call nor when resume skipped it."""
+    real = catalog.table_exists
+    monkeypatch.setattr(
+        catalog, "table_exists",
+        lambda spark, base, name: name != "parsed_turns" and real(spark, base, name),
+    )
+    fresh = str(tmp_path_factory.mktemp("probe_fresh"))
+    run_pipeline(spark, transcripts, fresh, "probe-1", n_buckets=8, resume=False)
+    resumed = str(tmp_path_factory.mktemp("probe_resume"))
+    run_pipeline(spark, transcripts, resumed, "probe-2", n_buckets=8,
+                 fail_after_route=True)
+    res = run_pipeline(spark, transcripts, resumed, "probe-2", n_buckets=8)
+    assert res.buckets_processed == [] and res.aggregate_ran
+    assert res.sink_counts["performance_metrics"] > 0
+    for out in (fresh, resumed):
+        agg = (
+            _read(spark, out, "state_metrics")
+            .where(F.col("stage") == "aggregate")
+            .collect()
+        )
+        assert len(agg) == 1 and agg[0].status == "done"
+        assert agg[0].row_count > 0
 
 
 def test_pipeline_resume_idempotent(spark, transcripts, tmp_path_factory):

@@ -3,6 +3,8 @@ and resume semantics of the foreachBatch LSH probe."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,7 +155,8 @@ def test_stream_probed_matches_batch_and_scans_band_tables(
     probed per-batch plan scans the materialized tables and never the
     corpus source — no re-shingling per micro-batch."""
     feed, corpus, new = split_docs
-    prefix = "stream_probe_corpus"
+    # per-run suffix: concurrent runs share the metastore's default database
+    prefix = f"stream_probe_corpus_{os.getpid()}"
     sh_name, band_name = dd.materialize_corpus_lsh(
         corpus, prefix, path=str(tmp_path / "corpus_lsh")
     )

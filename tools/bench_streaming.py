@@ -184,9 +184,12 @@ def main() -> None:
     # minhash_lsh_incremental_probed into the streaming path)
     from log_analysis_system_spark.operators import dedup as dd
 
+    # per-run prefix: concurrent runs share the metastore's default
+    # database and must not drop each other's tables
+    corpus_prefix = f"bench_stream_corpus_{os.getpid()}"
     t0 = time.perf_counter()
     sh_name, band_name = dd.materialize_corpus_lsh(
-        corpus, "bench_stream_corpus", path=os.path.join(work, "corpus_lsh")
+        corpus, corpus_prefix, path=os.path.join(work, "corpus_lsh")
     )
     mat_wall = time.perf_counter() - t0
 
@@ -196,7 +199,7 @@ def main() -> None:
         None,
         os.path.join(work, "dedup_out"),
         os.path.join(work, "ckpt_incdedup"),
-        corpus_prefix="bench_stream_corpus",
+        corpus_prefix=corpus_prefix,
     ).awaitTermination()
     wall = time.perf_counter() - t0
     corpus.unpersist()
