@@ -126,9 +126,10 @@ def _scaling_summary() -> dict | None:
 
     Reads the CPU-pinned trial log (the container-faithful protocol: each
     trial's whole process tree confined to exactly N CPUs via taskset —
-    see tools/run_scaling_r4_pinned.sh and BASELINE.md's pinned section),
-    takes the min-wall trial per core level, and reports throughput at
-    both levels plus the N->4N efficiency the north rule gates on.
+    see the cpuset argument of tools/scaling_trial_once.py and BASELINE.md's
+    pinned section), takes the min-wall trial per core level, and reports
+    throughput at both levels plus the N->4N efficiency the north rule
+    gates on.
     """
     # Logs are grouped into GENERATIONS: min-wall merges only WITHIN a
     # generation, because every log in one generation measures IDENTICAL

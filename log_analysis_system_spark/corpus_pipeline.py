@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import state as st
@@ -44,6 +44,7 @@ from .operators.textstats import (
     quality_keep_expr,
     split_exprs,
 )
+from .pipeline import write_observed
 
 # the Gopher signals that aren't already carried by the quality family
 # (n_words == n_tokens and mean_word_len == mean_token_len by shared
@@ -66,16 +67,6 @@ def _bucket(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
         "int"
     )
-
-
-def _write_counted(df: DataFrame, output_dir: str, name: str, **kw) -> int:
-    """Write with the row count observed INSIDE the write job — no separate
-    count pass over the sink (pipeline.py's ``_write_observed`` pattern,
-    generalized to partitioned/dynamic-overwrite writes)."""
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    catalog.write_table(df, output_dir, name, **kw)
-    return int(obs.get["n"])
 
 
 def score_projection(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -190,7 +181,7 @@ def run_corpus_pipeline(
         with st.StageTimer() as t:
             comp = dd.dedup_components(docs)
             comp = comp.withColumn("bucket", _bucket(n_buckets))
-            n_comp = _write_counted(
+            n_comp = write_observed(
                 comp, output_dir, "doc_components",
                 partition_cols=["bucket"], mode="overwrite_partitions",
             )
@@ -238,7 +229,7 @@ def run_corpus_pipeline(
                 .alias("reason"),
             )
         )
-        result.sink_counts["corpus_decisions"] = _write_counted(
+        result.sink_counts["corpus_decisions"] = write_observed(
             decisions, output_dir, "corpus_decisions",
             partition_cols=["bucket"], mode="overwrite_partitions",
         )
@@ -253,7 +244,7 @@ def run_corpus_pipeline(
                 F.sum("n_tokens").alias("n_tokens"),
             )
         )
-        result.sink_counts["corpus_mixture"] = _write_counted(
+        result.sink_counts["corpus_mixture"] = write_observed(
             mixture, output_dir, "corpus_mixture", mode="overwrite"
         )
     st.append_state(

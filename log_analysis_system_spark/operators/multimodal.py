@@ -481,8 +481,10 @@ def _walk_riff(payload: bytes, pos: int, end: int):
 
 def _frames_from_avi(payload: bytes):
     """Parse one RIFF/AVI payload into (frames nf x h x w x 3 RGB float64,
-    fps). Only the uncompressed 24-bit DIB layout is decoded here — the
-    compressed-handler seam. Raises ValueError on malformed input."""
+    fps). Only a single uncompressed 24-bit DIB video stream is decoded
+    here — the compressed-handler seam: a second stream header raises, and
+    only stream-0 frame chunks (``00db``/``00dc``) are read. Raises
+    ValueError on malformed input."""
     import struct
 
     if (
@@ -499,11 +501,18 @@ def _frames_from_avi(payload: bytes):
         )
     dims = None  # (w, h) from strf
     fps = None
+    n_streams = 0
     raw_frames: list[bytes] = []
     for cid, ltype, start, size in _walk_riff(payload, 12, 8 + riff_size):
         if cid == b"LIST" and ltype == b"hdrl":
             for c2, l2, s2, z2 in _walk_riff(payload, start, start + size):
                 if c2 == b"LIST" and l2 == b"strl":
+                    n_streams += 1
+                    if n_streams > 1:
+                        raise ValueError(
+                            "AVI has more than one stream; only a single "
+                            "video stream is decoded"
+                        )
                     for c3, _, s3, z3 in _walk_riff(payload, s2, s2 + z2):
                         if c3 == b"strh":
                             if payload[s3 : s3 + 4] != b"vids":
@@ -520,6 +529,8 @@ def _frames_from_avi(payload: bytes):
                                 )
                             fps = rate // scale
                         elif c3 == b"strf":
+                            if dims is not None:
+                                raise ValueError("AVI stream has a second strf")
                             if z3 < 40:
                                 raise ValueError("truncated strf header")
                             (_, w, h, _, bits, comp) = struct.unpack_from(
@@ -540,7 +551,7 @@ def _frames_from_avi(payload: bytes):
                             dims = (w, abs(h), h < 0)
         elif cid == b"LIST" and ltype == b"movi":
             for c2, _, s2, z2 in _walk_riff(payload, start, start + size):
-                if c2.endswith(b"db") or c2.endswith(b"dc"):
+                if c2 in (b"00db", b"00dc"):
                     raw_frames.append(payload[s2 : s2 + z2])
     if dims is None or fps is None:
         raise ValueError("AVI missing strh/strf stream headers")

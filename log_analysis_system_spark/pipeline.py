@@ -15,7 +15,10 @@ engineering the north rule demands:
   * ``route`` (per-bucket, resumable bucket-by-bucket): parse + enrich +
     per-ROW detectors (attack/scan patterns — embarrassingly parallel),
     fanned out to parsed/error/reject sinks and to each detector's
-    severity sink, one persisted frame feeding every sink;
+    severity sink, one persisted frame feeding every sink. The body
+    (``route_turns``) is shared with ``streaming_route``, whose
+    micro-batches add ``batch_id`` ahead of ``bucket`` in the partition
+    spec; the batch stage adds only the bucket shuffle and the state rows;
   * ``aggregate`` (global, all-or-nothing): reads BACK the completed
     parsed_turns sink (never recomputes parse) and runs the group-by
     detectors (suspicious IP / brute force / unusual method — global by
@@ -31,7 +34,6 @@ engineering the north rule demands:
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -69,18 +71,8 @@ class PipelineResult:
     sink_counts: dict[str, int] = field(default_factory=dict)
 
 
-def _bucket(col: str, n_buckets: int) -> Column:
+def bucket_of(col: str, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-
-def _sink_concurrency() -> int:
-    """How many independent sink-write jobs to have in flight at once.
-
-    Concurrent submission overlaps job-scheduling + commit latency of the
-    fan-out writes (all of which read only persisted frames). Tunable via
-    SPARK_GRAFT_SINK_CONCURRENCY; 1 = fully sequential writes.
-    """
-    return max(1, int(os.environ.get("SPARK_GRAFT_SINK_CONCURRENCY", "6")))
 
 
 def run_pipeline(
@@ -119,7 +111,7 @@ def run_pipeline(
     result = PipelineResult(run_id, pending, sorted(done))
 
     if pending:
-        bucketed = transcripts.withColumn("bucket", _bucket("conv_id", n_buckets))
+        bucketed = transcripts.withColumn("bucket", bucket_of("conv_id", n_buckets))
         if done:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
         _route_stage(spark, bucketed, output_dir, run_id, result, parse_engine,
@@ -143,17 +135,6 @@ def run_pipeline(
     return result
 
 
-def _sink(
-    result: PipelineResult, df: DataFrame, output_dir: str, name: str, total: int
-) -> None:
-    """Bucket-partitioned idempotent write; counts come from the caller's
-    single grouped-count pass, not a per-sink job."""
-    catalog.write_table(
-        df, output_dir, name, partition_cols=["bucket"], mode="overwrite_partitions"
-    )
-    result.sink_counts[name] = result.sink_counts.get(name, 0) + total
-
-
 def _route_stage(
     spark: SparkSession,
     bucketed: DataFrame,
@@ -175,10 +156,46 @@ def _route_stage(
         # bucket(n, conv_id)) while the task count follows the cores. The
         # bucket is the unit of lineage, resume and files, not of tasks.
         n_tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
-        bucketed = bucketed.repartitionById(n_tasks, "bucket")
-        enriched = enrich(parse_transcripts(bucketed, engine=parse_engine, cfg=cfg))
-        enriched.persist(StorageLevel.MEMORY_AND_DISK)
+        parsed_by_bucket = route_turns(
+            bucketed.repartitionById(n_tasks, "bucket"), output_dir,
+            result.sink_counts, n_buckets, parse_engine, cfg,
+        )
+        # an empty dynamic-partition overwrite replaces nothing: skip it
+        result.sink_counts[ROW_SINKS_BY_SEVERITY["low"]] = 0
 
+    st.append_state(
+        spark,
+        output_dir,
+        st.state_rows_from_counts(
+            run_id, "route", parsed_by_bucket, t.wall_ms, pending
+        ),
+    )
+
+
+def route_turns(
+    bucketed: DataFrame,
+    output_dir: str,
+    sink_counts: dict[str, int],
+    n_buckets: int,
+    parse_engine: str = "pandas",
+    cfg: RuntimeConfig = DEFAULT_CONFIG,
+    lead: dict[str, Column] | None = None,
+) -> dict[int, int]:
+    """The route body shared by the batch route stage and every streaming
+    micro-batch: parse + enrich + per-row detectors over ``bucketed`` (turns
+    carrying a ``bucket`` column), fanned out to the parsed/error/reject
+    sinks and each detector's severity sink, one persisted frame feeding
+    every sink. ``lead`` maps partition columns that lead ``bucket`` in
+    every sink's partition spec to their values (a micro-batch's
+    ``batch_id``). Sets each sink's row count in ``sink_counts`` and
+    returns the ``parsed_turns`` row count per bucket."""
+    lead = lead or {}
+    partition_cols = [*lead, "bucket"]
+    enriched = enrich(
+        parse_transcripts(bucketed, engine=parse_engine, cfg=cfg)
+    ).withColumns(lead)
+    enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         # one grouped-count job covers parsed/error/reject lineage metrics
         # and fills enriched's cache before the concurrent fan-out
         cat = (
@@ -195,65 +212,59 @@ def _route_stage(
         for r in cat_rows:
             counts.setdefault(r["cat"], {})[r["bucket"]] = r["cnt"]
 
-        def total(name: str) -> int:
-            return sum(counts.get(name, {}).values())
-
-        access = enriched.where(F.col("log_type") == "access")
+        access = enriched.where(F.col("log_type") == "access").drop("ts")
         errors = enriched.where(F.col("log_type") == "error").select(
-            "bucket", "conv_id", "turn_idx", "ts_parsed",
+            *partition_cols, "conv_id", "turn_idx", "ts_parsed",
             "level", "module", "pid", "message", "text",
         )
         rejects = enriched.where(F.col("log_format").isNull()).select(
-            "bucket", "conv_id", "turn_idx", "role", "tool", "ts", "text"
+            *partition_cols, "conv_id", "turn_idx", "role", "tool", "ts", "text"
         )
+
+        # idempotent writes: a rerun bucket (or a replayed micro-batch)
+        # replaces its own partitions
+        def counted(name: str, df: DataFrame) -> None:
+            catalog.write_table(
+                df, output_dir, name, partition_cols=partition_cols,
+                mode="overwrite_partitions",
+            )
+            sink_counts[name] = sum(counts.get(name, {}).values())
 
         # per-row detectors only (global detectors run in the aggregate
         # stage). Attack patterns are always high severity and scans always
         # medium, so each feeds its own sink; no row detector emits low.
-        def row_events(name: str, events: DataFrame) -> None:
-            result.sink_counts[name] = _write_observed(
-                events.withColumn("bucket", _bucket("conv_id", n_buckets)),
-                output_dir, name, partition_cols=["bucket"],
+        def observed(name: str, events: DataFrame) -> None:
+            events = events.withColumns(
+                {**lead, "bucket": bucket_of("conv_id", n_buckets)}
+            )
+            sink_counts[name] = write_observed(
+                events, output_dir, name, partition_cols=partition_cols,
                 mode="overwrite_partitions",
             )
 
-        # Every sink below reads only the persisted frame, so the five
-        # writes are independent Spark actions — submit them concurrently
-        # and let the scheduler interleave; each writes a distinct
-        # sink_counts key.
-        try:
-            with ThreadPoolExecutor(max_workers=_sink_concurrency()) as pool:
-                futures = [
-                    pool.submit(_sink, result, access.drop("ts"), output_dir,
-                                "parsed_turns", total("parsed_turns")),
-                    pool.submit(_sink, result, errors, output_dir,
-                                "error_turns", total("error_turns")),
-                    pool.submit(_sink, result, rejects, output_dir,
-                                "rejects", total("rejects")),
-                    pool.submit(row_events, ROW_SINKS_BY_SEVERITY["high"],
-                                sec.attack_events(enriched, cfg)),
-                    pool.submit(row_events, ROW_SINKS_BY_SEVERITY["medium"],
-                                sec.scan_events(enriched, cfg)),
-                ]
-                for f in futures:
-                    f.result()  # re-raises the first failure
-        finally:
-            # always drop the cache blocks — a failed concurrent sink write
-            # must not leak MEMORY_AND_DISK blocks for the session lifetime
-            enriched.unpersist()
-        # an empty dynamic-partition overwrite replaces nothing: skip it
-        result.sink_counts[ROW_SINKS_BY_SEVERITY["low"]] = 0
-
-    st.append_state(
-        spark,
-        output_dir,
-        st.state_rows_from_counts(
-            run_id, "route", counts.get("parsed_turns", {}), t.wall_ms, pending
-        ),
-    )
+        writes = [
+            (counted, "parsed_turns", access),
+            (counted, "error_turns", errors),
+            (counted, "rejects", rejects),
+            (observed, ROW_SINKS_BY_SEVERITY["high"],
+             sec.attack_events(enriched, cfg)),
+            (observed, ROW_SINKS_BY_SEVERITY["medium"],
+             sec.scan_events(enriched, cfg)),
+        ]
+        # Every sink reads only the persisted frame, so the writes are
+        # independent Spark actions — submit them concurrently and let the
+        # scheduler interleave; each sets a distinct sink_counts key.
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            for f in [pool.submit(*w) for w in writes]:
+                f.result()  # re-raises the first failure
+    finally:
+        # always drop the cache blocks — a failed concurrent sink write
+        # must not leak MEMORY_AND_DISK blocks for the session lifetime
+        enriched.unpersist()
+    return counts.get("parsed_turns", {})
 
 
-def _write_observed(
+def write_observed(
     df: DataFrame,
     output_dir: str,
     name: str,
@@ -303,7 +314,7 @@ def _aggregate_stage(
             .unionByName(sec.unusual_method_events(parsed, cfg))
             .withColumn(
                 "bucket",
-                F.coalesce(_bucket("conv_id", n_buckets), F.lit(-1)),
+                F.coalesce(bucket_of("conv_id", n_buckets), F.lit(-1)),
             )
         )
         agg_events.persist(StorageLevel.MEMORY_AND_DISK)
@@ -333,10 +344,10 @@ def _aggregate_stage(
         # (cache blocks are computed once under Spark's block-level locks,
         # whichever job touches a partition first).
         def _observed_to(name: str, df: DataFrame) -> None:
-            result.sink_counts[name] = _write_observed(df, output_dir, name)
+            result.sink_counts[name] = write_observed(df, output_dir, name)
 
         try:
-            with ThreadPoolExecutor(max_workers=min(5, _sink_concurrency())) as pool:
+            with ThreadPoolExecutor(max_workers=5) as pool:
                 futures = [
                     pool.submit(
                         _observed_to, name,
@@ -361,7 +372,7 @@ def _aggregate_stage(
             if row_events is not None:
                 all_events = all_events.unionByName(row_events.drop("bucket"))
             scores = sec.ip_threat_scores(all_events, cfg)
-            result.sink_counts["ip_threat_scores"] = _write_observed(
+            result.sink_counts["ip_threat_scores"] = write_observed(
                 scores, output_dir, "ip_threat_scores"
             )
 

@@ -7,11 +7,12 @@ users who tail a transcript feed instead of re-running batches:
 - ``read_transcript_stream``: file-source stream over a transcripts
   directory (same schema as the batch input); on a real deployment this is
   a Kafka/Iceberg-CDC source with identical downstream code.
-- ``streaming_route``: the same parse + enrich + per-row detectors as the
-  batch route stage (the operators are stream-safe: pure row-local
-  expressions), fanned out per severity with ``foreachBatch`` so each
-  micro-batch reuses the batch sink writer (and its idempotent
-  bucket-partition overwrite).
+- ``streaming_route``: each micro-batch runs the batch route body
+  (``pipeline.route_turns``) through ``foreachBatch`` — the same parse +
+  enrich + per-row detectors under the caller's ``cfg``, written to the
+  same five sinks (parsed, error and reject turns, high and medium row
+  events; no low sink) with ``batch_id`` leading ``bucket`` in the
+  partition spec.
 - ``streaming_traffic_counts``: tumbling event-time window aggregation with
   a watermark for late turns (the streaming analog of A9/A16).
 - ``streaming_failure_tool_join``: stream-stream interval join (failures x
@@ -39,10 +40,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..config import DEFAULT_CONFIG, RuntimeConfig
 from ..functions.parse import parse_transcripts
-from ..operators import security as sec
+from ..pipeline import bucket_of, route_turns
 from ..sources import catalog
-from ..sources.dims import enrich
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -95,10 +96,11 @@ def read_transcript_stream_jsonl(
     (``sources.jsonl``); the streaming contract differs in ONE honest way:
     ``readStream`` has no per-row corrupt-record split into a second
     frame, so malformed lines surface as all-NULL rows and are DROPPED
-    here (conv_id null) rather than routed to a rejects sink — feeds
-    needing reject capture should land through the batch door or a
-    foreachBatch wrapper. Every downstream streaming operator consumes
-    this stream unchanged (same TRANSCRIPT_SCHEMA columns)."""
+    here (conv_id null) rather than routed to a rejects sink. Turns that
+    arrive intact but fail the log grammar are still captured:
+    ``streaming_route`` writes them to its ``rejects`` sink. Every
+    downstream streaming operator consumes this stream unchanged (same
+    TRANSCRIPT_SCHEMA columns)."""
     from ..sources.jsonl import _TS_FMT, JSONL_SCHEMA
 
     raw = (
@@ -148,49 +150,22 @@ def streaming_route(
     checkpoint_dir: str,
     n_buckets: int = 32,
     parse_engine: str = "pandas",
+    cfg: RuntimeConfig = DEFAULT_CONFIG,
 ):
-    """Parse + enrich + per-row detectors on a stream; per-severity fan-out
-    via foreachBatch reusing the batch writers, with ``batch_id`` leading
-    the partition spec + dynamic overwrite so a replayed micro-batch
-    (foreachBatch is at-least-once) replaces rather than duplicates its
-    output. Returns the started StreamingQuery."""
+    """Run each micro-batch through the batch route body
+    (``pipeline.route_turns``) via foreachBatch: the same parse + enrich +
+    per-row detectors under ``cfg``, the same five sinks (``parsed_turns``,
+    ``error_turns``, ``rejects``, ``security_events_high``/``_medium``).
+    ``batch_id`` leads the partition spec and every write dynamic-overwrites,
+    so a replayed micro-batch (foreachBatch is at-least-once) replaces
+    rather than duplicates its output. Returns the started StreamingQuery."""
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = enrich(parse_transcripts(batch_df, engine=parse_engine))
-        enriched = enriched.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-        ).withColumn("batch_id", F.lit(batch_id))
-        enriched.persist()
-        try:
-            # foreachBatch is at-least-once: batch_id leads the partition
-            # spec and the write dynamic-overwrites, so a replayed batch
-            # replaces its own partitions instead of double-appending
-            access = enriched.where(F.col("log_type") == "access").drop("ts")
-            catalog.write_table(
-                access, output_dir, "parsed_turns",
-                partition_cols=["batch_id", "bucket"],
-                mode="overwrite_partitions",
-            )
-            events = sec.attack_events(enriched).unionByName(
-                sec.scan_events(enriched)
-            )
-            for severity, name in [
-                ("high", "security_events_high"),
-                ("medium", "security_events_medium"),
-                ("low", "security_events_low"),
-            ]:
-                df = events.where(F.col("severity") == severity).withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-                ).withColumn("batch_id", F.lit(batch_id))
-                catalog.write_table(
-                    df, output_dir, name,
-                    partition_cols=["batch_id", "bucket"],
-                    mode="overwrite_partitions",
-                )
-        finally:
-            enriched.unpersist()
+        route_turns(
+            batch_df.withColumn("bucket", bucket_of("conv_id", n_buckets)),
+            output_dir, sink_counts={}, n_buckets=n_buckets,
+            parse_engine=parse_engine, cfg=cfg, lead={"batch_id": F.lit(batch_id)},
+        )
 
     return (
         stream.writeStream.foreachBatch(handle_batch)

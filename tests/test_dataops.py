@@ -1540,3 +1540,25 @@ def test_video_decode_refuses_zero_rate_and_dims():
     avi[strf_body + 8 : strf_body + 12] = (0).to_bytes(4, "little", signed=True)
     with _pytest.raises(ValueError, match="bad DIB dimensions"):
         mm.decode_video(bytes(avi))
+
+
+def test_video_decode_refuses_second_stream():
+    """A second 'vids' stream must raise the typed ValueError, not decode
+    both streams' frames under the first stream's dimensions. The clip
+    gets a copy of its own strl list spliced into hdrl, with the hdrl and
+    RIFF sizes patched so the container stays well formed."""
+    import struct as _struct
+
+    import pytest as _pytest
+
+    avi = bytearray(mm.make_video(0))
+    strl_at = avi.index(b"strl") - 8  # the LIST header of the stream list
+    (strl_size,) = _struct.unpack_from("<I", avi, strl_at + 4)
+    strl = bytes(avi[strl_at : strl_at + 8 + strl_size])
+    avi[strl_at + len(strl) : strl_at + len(strl)] = strl
+    hdrl_size_at = avi.index(b"hdrl") - 4
+    for at in (4, hdrl_size_at):
+        (size,) = _struct.unpack_from("<I", avi, at)
+        _struct.pack_into("<I", avi, at, size + len(strl))
+    with _pytest.raises(ValueError, match="more than one stream"):
+        mm.decode_video(bytes(avi))

@@ -69,6 +69,55 @@ def test_streaming_route_matches_batch_counts(spark, stream_dirs):
     assert n_total == expected > n_first
 
 
+def test_streaming_route_matches_batch_under_runtime_config(spark, stream_dirs):
+    """Stream and batch run one route body: under a non-default
+    RuntimeConfig both write the same rows to every route sink (bucket and
+    batch_id aside), error and reject turns included. The patterns are
+    chosen so that the sf0.001 detector hits differ from the defaults'."""
+    import dataclasses
+
+    from log_analysis_system_spark.config import DEFAULT_CONFIG
+    from log_analysis_system_spark.pipeline import run_pipeline
+    from log_analysis_system_spark.sources import catalog
+    from log_analysis_system_spark.streaming.stream_pipeline import (
+        TRANSCRIPT_SCHEMA,
+    )
+
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        attack_patterns=("/admin/login", "/checkout"),
+        scan_patterns=("/api/", "/health"),
+    )
+    load_transcripts(spark, SF).write.parquet(stream_dirs["in"])
+    batch_out = stream_dirs["out"] + "_batch"
+    # route sinks only: the aggregate stage is not under comparison
+    run_pipeline(
+        spark, spark.read.schema(TRANSCRIPT_SCHEMA).parquet(stream_dirs["in"]),
+        batch_out, "cfg-run", cfg=cfg, fail_after_route=True,
+    )
+    q = streaming_route(
+        read_transcript_stream(spark, stream_dirs["in"]),
+        stream_dirs["out"], stream_dirs["ckpt"], cfg=cfg,
+    )
+    assert q.awaitTermination(300)
+
+    for sink in ("parsed_turns", "error_turns", "rejects",
+                 "security_events_high", "security_events_medium"):
+        batch = catalog.read_table(spark, batch_out, sink).drop("bucket")
+        stream = catalog.read_table(spark, stream_dirs["out"], sink).drop(
+            "bucket", "batch_id"
+        )
+        cols = sorted(batch.columns)
+        assert sorted(stream.columns) == cols, sink
+        batch, stream = batch.select(cols), stream.select(cols)
+        assert batch.count() == stream.count() > 0, sink
+        assert batch.exceptAll(stream).isEmpty(), sink
+        assert stream.exceptAll(batch).isEmpty(), sink
+    # the config took effect: no default-only pattern fired
+    high = catalog.read_table(spark, stream_dirs["out"], "security_events_high")
+    assert high.where(~F.col("endpoint").rlike("/admin/login|/checkout")).isEmpty()
+
+
 def test_streaming_window_counts(spark, stream_dirs):
     t = load_transcripts(spark, SF)
     t.write.mode("append").parquet(stream_dirs["in"])
