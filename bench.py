@@ -110,108 +110,6 @@ def _force(df) -> int:
     return 0
 
 
-# Pinned-scaling trial logs grouped by CODE GENERATION, newest first
-# (module-level so tests can exercise the fallback logic). See
-# _scaling_summary for the merge rule.
-SCALING_LOG_GENERATIONS = [
-    # round-5 code (ADVICE fixes + aggregate-stage all-rejects guard)
-    ["scaling_trials_r5_pinned.jsonl"],
-    # round-4 code (two logs, zero pipeline-path commits in between)
-    ["scaling_trials_r4_pinned.jsonl", "scaling_trials_r4s4_pinned.jsonl"],
-]
-
-
-def _scaling_summary() -> dict | None:
-    """N -> 4N scaling evidence from the recorded probe-gated trial logs.
-
-    Reads the CPU-pinned trial log (the container-faithful protocol: each
-    trial's whole process tree confined to exactly N CPUs via taskset —
-    see the cpuset argument of tools/scaling_trial_once.py and BASELINE.md's
-    pinned section), takes the min-wall trial per core level, and reports
-    throughput at both levels plus the N->4N efficiency the north rule
-    gates on.
-    """
-    # Logs are grouped into GENERATIONS: min-wall merges only WITHIN a
-    # generation, because every log in one generation measures IDENTICAL
-    # pipeline code over the same deterministic input recipe (checked per
-    # session). Across generations the code differs (e.g. the round-5
-    # aggregate-stage guard), so pairing a fast-code level with a
-    # slow-code level would misstate the efficiency. The newest
-    # generation that yields a pairable two-level set wins; older
-    # generations are the fallback while a new generation is still
-    # collecting its clean trials.
-    here = os.path.dirname(os.path.abspath(__file__))
-    generations = SCALING_LOG_GENERATIONS
-    try:
-        best: dict[tuple[int, int], dict] = {}
-        used: list[str] = []
-        for gen in generations:
-            best, used = {}, []
-            for name in gen:
-                log = os.path.join(here, "tools", name)
-                if not os.path.exists(log):
-                    continue
-                used.append(os.path.basename(log))
-                with open(log) as fh:
-                    for line in fh:
-                        rec = json.loads(line)
-                        t = rec.get("trial")
-                        if not t or not rec.get("probe", {}).get("clean"):
-                            continue
-                        # min-wall is only meaningful among trials of the
-                        # SAME input size, so the key carries turns; a log
-                        # with a different turn count can then never be
-                        # min-wall-merged against these (this was a
-                        # comment-only guard before)
-                        c = (t["cores"], t["turns"])
-                        if c not in best or t["wall_s"] < best[c]["wall_s"]:
-                            best[c] = t
-            if any(
-                len({c for c, n2 in best if n2 == n}) >= 2
-                for n in {n for _, n in best}
-            ):
-                break  # this generation has a PAIRABLE two-level set:
-                # two core levels at a common input size (two levels at
-                # different sizes don't count — fall through to older
-                # generations instead of returning None below)
-        # pair the two core levels at the largest input size measured at
-        # BOTH levels; no common size -> no pairable experiment
-        sizes = {n for _, n in best}
-        pairable = [
-            n for n in sizes
-            if len({c for c, n2 in best if n2 == n}) >= 2
-        ]
-        if not pairable:
-            if len({c for c, _ in best}) >= 2:
-                print(
-                    "scaling: trial logs have two core levels but no "
-                    "common input size — refusing to pair mismatched "
-                    f"inputs (sizes per level: "
-                    f"{sorted(best)})",
-                    file=sys.stderr,
-                )
-            return None
-        n_turns = max(pairable)
-        levels = sorted(c for c, n in best if n == n_turns)
-        lo, hi = levels[0], levels[-1]
-        best = {c: best[(c, n_turns)] for c in (lo, hi)}
-        ratio = hi / lo
-        eff = (best[hi]["turns_per_sec"] / best[lo]["turns_per_sec"]) / ratio
-        return {
-            "protocol": "cpu-pinned (taskset) probe-gated min-wall trials; "
-                        f"logs {', '.join('tools/' + u for u in used)}",
-            "input_turns": best[hi]["turns"],
-            "cores_small": lo,
-            "cores_large": hi,
-            "turns_per_sec_small": best[lo]["turns_per_sec"],
-            "turns_per_sec_large": best[hi]["turns_per_sec"],
-            "parallelism_ratio": ratio,
-            "scaling_efficiency": round(eff, 3),
-        }
-    except Exception:  # noqa: BLE001
-        return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -323,7 +221,6 @@ def main() -> None:
         "host_window_clean": host.get("clean"),
         "bench_repeat": repeat,
         "query_probes": query_probes,
-        "scaling": _scaling_summary(),
     }))
     spark.stop()
 

@@ -17,8 +17,11 @@ engineering the north rule demands:
     fanned out to parsed/error/reject sinks and to each detector's
     severity sink, one persisted frame feeding every sink. The body
     (``route_turns``) is shared with ``streaming_route``, whose
-    micro-batches add ``batch_id`` ahead of ``bucket`` in the partition
-    spec; the batch stage adds only the bucket shuffle and the state rows;
+    micro-batches partition every sink by ``batch_id`` instead of
+    ``bucket`` (one file per sink per input partition, ``bucket`` kept as
+    a column: replay is keyed on ``batch_id``, and per-bucket resume is a
+    batch concern); the batch stage adds only the bucket shuffle and the
+    state rows;
   * ``aggregate`` (global, all-or-nothing): reads BACK the completed
     parsed_turns sink (never recomputes parse) and runs the group-by
     detectors (suspicious IP / brute force / unusual method — global by
@@ -50,10 +53,10 @@ from .operators import security as sec
 from .sources import catalog
 from .sources.dims import enrich
 
+# no row detector emits low severity, so no route writes security_events_low
 ROW_SINKS_BY_SEVERITY = {
     "high": "security_events_high",
     "medium": "security_events_medium",
-    "low": "security_events_low",
 }
 AGG_SINKS_BY_SEVERITY = {
     "high": "security_events_agg_high",
@@ -161,7 +164,7 @@ def _route_stage(
             result.sink_counts, n_buckets, parse_engine, cfg,
         )
         # an empty dynamic-partition overwrite replaces nothing: skip it
-        result.sink_counts[ROW_SINKS_BY_SEVERITY["low"]] = 0
+        result.sink_counts["security_events_low"] = 0
 
     st.append_state(
         spark,
@@ -179,21 +182,24 @@ def route_turns(
     n_buckets: int,
     parse_engine: str = "pandas",
     cfg: RuntimeConfig = DEFAULT_CONFIG,
-    lead: dict[str, Column] | None = None,
+    partition_by: dict[str, Column] | None = None,
 ) -> dict[int, int]:
     """The route body shared by the batch route stage and every streaming
     micro-batch: parse + enrich + per-row detectors over ``bucketed`` (turns
     carrying a ``bucket`` column), fanned out to the parsed/error/reject
     sinks and each detector's severity sink, one persisted frame feeding
-    every sink. ``lead`` maps partition columns that lead ``bucket`` in
-    every sink's partition spec to their values (a micro-batch's
-    ``batch_id``). Sets each sink's row count in ``sink_counts`` and
-    returns the ``parsed_turns`` row count per bucket."""
-    lead = lead or {}
-    partition_cols = [*lead, "bucket"]
+    every sink. ``partition_by`` maps the columns that replace ``bucket``
+    as every sink's partition spec to their values (a micro-batch's
+    ``batch_id``, so each sink writes one file per input partition, not one
+    per bucket); without it the sinks partition by ``bucket``. ``bucket``
+    stays a column of every sink either way. Sets each sink's row count in
+    ``sink_counts`` and returns the ``parsed_turns`` row count per
+    bucket."""
+    partition_by = partition_by or {}
+    partition_cols = list(partition_by) or ["bucket"]
     enriched = enrich(
         parse_transcripts(bucketed, engine=parse_engine, cfg=cfg)
-    ).withColumns(lead)
+    ).withColumns(partition_by)
     enriched.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # one grouped-count job covers parsed/error/reject lineage metrics
@@ -214,11 +220,12 @@ def route_turns(
 
         access = enriched.where(F.col("log_type") == "access").drop("ts")
         errors = enriched.where(F.col("log_type") == "error").select(
-            *partition_cols, "conv_id", "turn_idx", "ts_parsed",
+            *partition_by, "bucket", "conv_id", "turn_idx", "ts_parsed",
             "level", "module", "pid", "message", "text",
         )
         rejects = enriched.where(F.col("log_format").isNull()).select(
-            *partition_cols, "conv_id", "turn_idx", "role", "tool", "ts", "text"
+            *partition_by, "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
+            "text",
         )
 
         # idempotent writes: a rerun bucket (or a replayed micro-batch)
@@ -235,7 +242,7 @@ def route_turns(
         # medium, so each feeds its own sink; no row detector emits low.
         def observed(name: str, events: DataFrame) -> None:
             events = events.withColumns(
-                {**lead, "bucket": bucket_of("conv_id", n_buckets)}
+                {**partition_by, "bucket": bucket_of("conv_id", n_buckets)}
             )
             sink_counts[name] = write_observed(
                 events, output_dir, name, partition_cols=partition_cols,

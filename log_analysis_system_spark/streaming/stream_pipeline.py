@@ -11,8 +11,9 @@ users who tail a transcript feed instead of re-running batches:
   (``pipeline.route_turns``) through ``foreachBatch`` — the same parse +
   enrich + per-row detectors under the caller's ``cfg``, written to the
   same five sinks (parsed, error and reject turns, high and medium row
-  events; no low sink) with ``batch_id`` leading ``bucket`` in the
-  partition spec.
+  events; no low sink), each partitioned by ``batch_id`` with ``bucket``
+  kept as a column: one part file per sink per micro-batch input
+  partition instead of one per bucket.
 - ``streaming_traffic_counts``: tumbling event-time window aggregation with
   a watermark for late turns (the streaming analog of A9/A16).
 - ``streaming_failure_tool_join``: stream-stream interval join (failures x
@@ -156,15 +157,19 @@ def streaming_route(
     (``pipeline.route_turns``) via foreachBatch: the same parse + enrich +
     per-row detectors under ``cfg``, the same five sinks (``parsed_turns``,
     ``error_turns``, ``rejects``, ``security_events_high``/``_medium``).
-    ``batch_id`` leads the partition spec and every write dynamic-overwrites,
-    so a replayed micro-batch (foreachBatch is at-least-once) replaces
-    rather than duplicates its output. Returns the started StreamingQuery."""
+    Every sink is partitioned by ``batch_id`` alone (``bucket`` stays a
+    column) and every write dynamic-overwrites, so a replayed micro-batch
+    (foreachBatch is at-least-once) replaces rather than duplicates its
+    output, and each micro-batch writes one part file per sink per input
+    partition rather than one per bucket. Returns the started
+    StreamingQuery."""
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         route_turns(
             batch_df.withColumn("bucket", bucket_of("conv_id", n_buckets)),
             output_dir, sink_counts={}, n_buckets=n_buckets,
-            parse_engine=parse_engine, cfg=cfg, lead={"batch_id": F.lit(batch_id)},
+            parse_engine=parse_engine, cfg=cfg,
+            partition_by={"batch_id": F.lit(batch_id)},
         )
 
     return (

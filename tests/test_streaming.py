@@ -118,6 +118,77 @@ def test_streaming_route_matches_batch_under_runtime_config(spark, stream_dirs):
     assert high.where(~F.col("endpoint").rlike("/admin/login|/checkout")).isEmpty()
 
 
+def test_streaming_route_sinks_partition_by_batch_id(spark, stream_dirs):
+    """Micro-batch sinks are partitioned by ``batch_id`` alone: no
+    ``bucket=`` dirs, one part file per micro-batch per sink (each JSONL
+    drop is one input partition), ``bucket`` kept as a column with the
+    batch route's value, and a replayed micro-batch replaces its own
+    ``batch_id=`` partition instead of adding rows."""
+    import json as _json
+    import os
+    import pathlib
+
+    from log_analysis_system_spark.pipeline import bucket_of, route_turns
+    from log_analysis_system_spark.sources import catalog
+    from log_analysis_system_spark.sources.jsonl import read_transcripts_jsonl
+    from log_analysis_system_spark.streaming.stream_pipeline import (
+        read_transcript_stream_jsonl,
+    )
+
+    rows = load_transcripts(spark, SF).limit(600).collect()
+    feed = pathlib.Path(stream_dirs["in"])
+    feed.mkdir(parents=True)
+    for i in range(3):
+        drop = feed / f"drop{i}.jsonl"
+        with open(drop, "w") as f:
+            for r in rows[i * 200:(i + 1) * 200]:
+                f.write(_json.dumps({
+                    "conv_id": r.conv_id, "turn_idx": r.turn_idx,
+                    "role": r.role, "text": r.text, "tool": r.tool,
+                    "ts": r.ts.isoformat() if r.ts else None,
+                }) + "\n")
+        # the file source orders drops by mtime: drop0 is batch 0
+        os.utime(drop, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    out = stream_dirs["out"]
+    q = streaming_route(
+        read_transcript_stream_jsonl(spark, str(feed), max_files_per_trigger=1),
+        out, stream_dirs["ckpt"],
+    )
+    assert q.awaitTermination(300)
+
+    sinks = ("parsed_turns", "error_turns", "rejects",
+             "security_events_high", "security_events_medium")
+    for sink in sinks:
+        root = pathlib.Path(out) / sink
+        if not root.exists():
+            continue
+        assert not [p for p in root.rglob("bucket=*")], sink
+        batch_dirs = sorted(root.glob("batch_id=*"))
+        assert {p.name for p in batch_dirs} <= {f"batch_id={k}" for k in range(3)}
+        for d in batch_dirs:
+            assert len(list(d.glob("part-*.parquet"))) == 1, d
+        table = catalog.read_table(spark, out, sink)
+        assert "bucket" in table.columns, sink
+        assert table.where(
+            ~F.col("bucket").eqNullSafe(bucket_of("conv_id", 32))
+        ).isEmpty(), sink
+    assert len(list((pathlib.Path(out) / "parsed_turns").glob("batch_id=*"))) == 3
+
+    before = catalog.read_table(spark, out, "parsed_turns")
+    n_before = before.count()
+    before = before.localCheckpoint()
+    # replay batch 0 (foreachBatch is at-least-once): same rows, same count
+    turns, _ = read_transcripts_jsonl(spark, str(feed / "drop0.jsonl"))
+    route_turns(
+        turns.withColumn("bucket", bucket_of("conv_id", 32)), out,
+        sink_counts={}, n_buckets=32, partition_by={"batch_id": F.lit(0)},
+    )
+    after = catalog.read_table(spark, out, "parsed_turns")
+    assert after.count() == n_before > 0
+    assert after.select(before.columns).exceptAll(before).isEmpty()
+
+
 def test_streaming_window_counts(spark, stream_dirs):
     t = load_transcripts(spark, SF)
     t.write.mode("append").parquet(stream_dirs["in"])
