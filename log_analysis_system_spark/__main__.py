@@ -7,8 +7,7 @@ Mirrors the reference's argparse entry point (``main.py:48-78`` —
         --input /root/testdata/sf0.001 --output /tmp/out \
         [--run-id RID] [--no-resume] [--analyze-only] \
         [--config config.yaml] [--patterns patterns.yaml] \
-        [--suspicious-ips ips.txt] [--buckets 32] \
-        [--parse-engine pandas|sql] [--master local[*]]
+        [--suspicious-ips ips.txt] [--buckets 32] [--master local[*]]
 
 ``--input`` accepts a testdata scale dir (containing ``events.parquet`` —
 transcripts are rendered from it deterministically), a directory of raw
@@ -58,7 +57,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--suspicious-ips", default=None, help="suspicious_ips.txt")
     p.add_argument("--buckets", type=int, default=32,
                    help="conv_id hash buckets (lineage/resume granularity)")
-    p.add_argument("--parse-engine", choices=("pandas", "sql"), default="pandas")
     p.add_argument("--master", default=None,
                    help="spark master (default local[$SPARK_GRAFT_CPUS]); "
                    "pass '' to defer to the cluster manager")
@@ -240,7 +238,6 @@ def main(argv: list[str] | None = None) -> int:
             args.output,
             run_id=args.run_id or uuid.uuid4().hex[:12],
             n_buckets=args.buckets,
-            parse_engine=args.parse_engine,
             resume=not args.no_resume,
             analyze_only=args.analyze_only,
             cfg=cfg,

@@ -44,14 +44,14 @@ from .operators.textstats import (
     quality_keep_expr,
     split_exprs,
 )
-from .pipeline import write_observed
+from .pipeline import bucket_of, write_observed
+from .sources import catalog
 
 # the Gopher signals that aren't already carried by the quality family
 # (n_words == n_tokens and mean_word_len == mean_token_len by shared
 # formula, so the verdict reads those columns instead of duplicating them)
 _GOPHER_REMAP = {"n_words": "n_tokens", "mean_word_len": "mean_token_len"}
 _GOPHER_EXTRA = ("symbol_word_ratio", "alpha_word_frac")
-from .sources import catalog
 
 
 @dataclass
@@ -61,12 +61,6 @@ class CorpusResult:
     buckets_skipped: list[int]
     stages_ran: list[str] = field(default_factory=list)
     sink_counts: dict[str, int] = field(default_factory=dict)
-
-
-def _bucket(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
-        "int"
-    )
 
 
 def score_projection(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -86,7 +80,7 @@ def score_projection(docs: DataFrame, n_buckets: int) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        _bucket(n_buckets).alias("bucket"),
+        bucket_of(F.col("doc_id").cast("string"), n_buckets).alias("bucket"),
         *(expr.alias(name) for name, expr in q.items()),
         *(g[name].alias(name) for name in _GOPHER_EXTRA),
         F.length("text").alias("n_chars"),
@@ -180,7 +174,9 @@ def run_corpus_pipeline(
     )):
         with st.StageTimer() as t:
             comp = dd.dedup_components(docs)
-            comp = comp.withColumn("bucket", _bucket(n_buckets))
+            comp = comp.withColumn(
+                "bucket", bucket_of(F.col("doc_id").cast("string"), n_buckets)
+            )
             n_comp = write_observed(
                 comp, output_dir, "doc_components",
                 partition_cols=["bucket"], mode="overwrite_partitions",

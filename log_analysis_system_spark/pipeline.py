@@ -74,7 +74,7 @@ class PipelineResult:
     sink_counts: dict[str, int] = field(default_factory=dict)
 
 
-def bucket_of(col: str, n_buckets: int) -> Column:
+def bucket_of(col: str | Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
@@ -84,7 +84,6 @@ def run_pipeline(
     output_dir: str,
     run_id: str,
     n_buckets: int = 32,
-    parse_engine: str = "pandas",
     resume: bool = True,
     fail_after_route: bool = False,
     analyze_only: bool = False,
@@ -117,7 +116,7 @@ def run_pipeline(
         bucketed = transcripts.withColumn("bucket", bucket_of("conv_id", n_buckets))
         if done:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
-        _route_stage(spark, bucketed, output_dir, run_id, result, parse_engine,
+        _route_stage(spark, bucketed, output_dir, run_id, result,
                      set(pending), n_buckets, cfg)
 
     if fail_after_route:
@@ -144,7 +143,6 @@ def _route_stage(
     output_dir: str,
     run_id: str,
     result: PipelineResult,
-    parse_engine: str,
     pending: set[int],
     n_buckets: int,
     cfg: RuntimeConfig = DEFAULT_CONFIG,
@@ -161,7 +159,7 @@ def _route_stage(
         n_tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
         parsed_by_bucket = route_turns(
             bucketed.repartitionById(n_tasks, "bucket"), output_dir,
-            result.sink_counts, n_buckets, parse_engine, cfg,
+            result.sink_counts, n_buckets, cfg,
         )
         # an empty dynamic-partition overwrite replaces nothing: skip it
         result.sink_counts["security_events_low"] = 0
@@ -180,7 +178,6 @@ def route_turns(
     output_dir: str,
     sink_counts: dict[str, int],
     n_buckets: int,
-    parse_engine: str = "pandas",
     cfg: RuntimeConfig = DEFAULT_CONFIG,
     partition_by: dict[str, Column] | None = None,
 ) -> dict[int, int]:
@@ -198,7 +195,7 @@ def route_turns(
     partition_by = partition_by or {}
     partition_cols = list(partition_by) or ["bucket"]
     enriched = enrich(
-        parse_transcripts(bucketed, engine=parse_engine, cfg=cfg)
+        parse_transcripts(bucketed, engine="pandas", cfg=cfg)
     ).withColumns(partition_by)
     enriched.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -369,10 +366,16 @@ def _aggregate_stage(
                 for f in futures:
                     f.result()
 
-            # threat scores over the union of all routed events
+            # threat scores over the union of all routed events. A sink this
+            # call's route wrote rows to is read without a probe: a probe
+            # that fails transiently must not drop its events. Only a sink
+            # the route did not fill here (analyze-only, resumed buckets)
+            # is probed, as it may have no schema-bearing files.
             row_events = None
             for name in ROW_SINKS_BY_SEVERITY.values():
-                if catalog.table_exists(spark, output_dir, name):
+                if result.sink_counts.get(name) or catalog.table_exists(
+                    spark, output_dir, name
+                ):
                     t_df = catalog.read_table(spark, output_dir, name)
                     row_events = t_df if row_events is None else row_events.unionByName(t_df)
             all_events = agg_events.drop("bucket")

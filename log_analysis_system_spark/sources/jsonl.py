@@ -2,55 +2,19 @@
 tables and raw ``.log`` directories (``logfiles.py``).
 
 Agent-framework exports and event-bus dumps commonly arrive as JSONL, one
-turn object per line. This reader maps that feed onto the same transcripts
-contract ``(conv_id, turn_idx, role, text, tool, ts)`` the whole
-parse -> enrich -> route -> aggregate pipeline consumes, with two
-non-negotiable scale properties:
-
-- **Explicit schema, never inference.** ``spark.read.json`` without a
-  schema runs a full inference pre-scan — a second pass over 100 TB before
-  any work starts. The transcript schema is the ``input_hint`` contract;
-  it is declared, not discovered.
-- **PERMISSIVE corrupt-record routing, never fail/drop.** A malformed line
-  on an at-scale feed must neither kill the job (FAILFAST) nor vanish
-  silently (DROPMALFORMED). PERMISSIVE mode parks the raw line in
-  ``_corrupt_record``; :func:`read_transcripts_jsonl` splits the frame
-  into (clean, rejects) so malformed input lands in the same rejects-sink
-  flow the parse stage uses for unparseable payloads (SURVEY P7).
-
-Timestamps ride as ISO-8601 strings in the JSON and are parsed with
-``try_to_timestamp`` (NULL, not exception, on malformed values — the
-pipeline's zero-default coercion policy, SURVEY P5).
+turn object per line. This reader maps that feed onto the transcripts
+contract the whole parse -> enrich -> route -> aggregate pipeline
+consumes, under the text-feed contract of ``sources.feed`` (declared
+schema, PERMISSIVE corrupt-line capture, ``missing_conv_id`` rejects,
+null-on-failure ``ts``). A malformed line is rejected as
+``malformed_json``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-# ts arrives as a string column: JSON has no timestamp type, and letting
-# Spark's JSON reader coerce timestamps couples the contract to its
-# timestamp-format session options; try_to_timestamp keeps the coercion
-# explicit, null-safe, and engine-pinned.
-JSONL_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts", StringType()),
-        StructField("_corrupt_record", StringType()),
-    ]
-)
-
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]"
+from .feed import FEED_SCHEMA, PERMISSIVE, serialize_turns, split_feed
 
 
 def read_transcripts_jsonl(
@@ -59,55 +23,14 @@ def read_transcripts_jsonl(
     """Read a JSONL transcript feed (one glob/path or a list of them —
     ``load_input`` passes ``*.jsonl`` parts, or bare ``*.json`` parts for
     a parquet-free directory, so :func:`write_transcripts_jsonl` output
-    ingests directly); returns ``(turns, rejects)``.
-
-    ``turns`` carries the transcripts contract with ``ts`` parsed
-    (timestamp_ntz to match the parquet tables); ``rejects`` carries
-    ``(raw, reason)`` for every malformed line — route it to the rejects
-    sink. A line missing conv_id is malformed by contract (the pipeline
-    buckets, sessionizes, and resumes on conv_id; an unattributable turn
-    cannot enter any of that) and is rejected, not defaulted.
-    """
-    raw = (
-        spark.read.schema(JSONL_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-    # cache-free split: both sides are narrow projections of one scan; the
-    # corrupt marker and the conv_id contract decide the side
-    malformed = F.col("_corrupt_record").isNotNull()
-    no_conv = F.col("conv_id").isNull()
-    turns = (
-        raw.where(~malformed & ~no_conv)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "text",
-            "tool",
-            F.try_to_timestamp(F.col("ts"), F.lit(_TS_FMT))
-            .cast("timestamp_ntz")
-            .alias("ts"),
-        )
-    )
-    rejects = raw.where(malformed | no_conv).select(
-        F.coalesce(F.col("_corrupt_record"), F.to_json(F.struct(
-            "conv_id", "turn_idx", "role", "text", "tool", "ts"
-        ))).alias("raw"),
-        F.when(malformed, F.lit("malformed_json"))
-        .otherwise(F.lit("missing_conv_id"))
-        .alias("reason"),
-    )
-    return turns, rejects
+    ingests directly); returns ``feed.split_feed``'s ``(turns,
+    rejects)``: turns with ``ts`` as timestamp_ntz (matching the parquet
+    tables), rejects as ``(raw, reason)`` for the rejects sink."""
+    raw = spark.read.schema(FEED_SCHEMA).options(**PERMISSIVE).json(path)
+    return split_feed(raw, "malformed_json")
 
 
 def write_transcripts_jsonl(df: DataFrame, path: str) -> None:
     """Round-trip sink: one JSON object per line, ts serialized ISO-8601
     (the format :func:`read_transcripts_jsonl` parses back losslessly)."""
-    (
-        df.select(
-            "conv_id", "turn_idx", "role", "text", "tool",
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        ).write.mode("overwrite").json(path)
-    )
+    serialize_turns(df).write.mode("overwrite").json(path)

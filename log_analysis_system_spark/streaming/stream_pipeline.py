@@ -45,6 +45,8 @@ from ..config import DEFAULT_CONFIG, RuntimeConfig
 from ..functions.parse import parse_transcripts
 from ..pipeline import bucket_of, route_turns
 from ..sources import catalog
+from ..sources.csvfile import CSV_OPTIONS
+from ..sources.feed import FEED_SCHEMA, PERMISSIVE, clean_turns
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -69,80 +71,52 @@ def read_transcript_stream(
     )
 
 
-def _clean_transcript_stream(raw: DataFrame, ts_fmt: str) -> DataFrame:
-    """Shared drop-malformed tail of the JSONL/CSV streaming doors: keep
-    non-corrupt rows with a conv_id, coerce ts, project the
-    TRANSCRIPT_SCHEMA columns (the one place the streaming-side contract
-    lives — change it here and both doors follow)."""
-    return raw.where(
-        F.col("_corrupt_record").isNull() & F.col("conv_id").isNotNull()
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        F.try_to_timestamp(F.col("ts"), F.lit(ts_fmt))
-        .cast("timestamp")
-        .alias("ts"),
-    )
-
-
 def read_transcript_stream_jsonl(
     spark: SparkSession, path: str, max_files_per_trigger: int = 16
 ) -> DataFrame:
     """JSONL-drop transcript stream — the shape agent frameworks actually
     emit (append a ``.jsonl``/``.json`` file per flush into a drop dir).
-    Same declared schema and ts coercion as the batch front door
-    (``sources.jsonl``); the streaming contract differs in ONE honest way:
-    ``readStream`` has no per-row corrupt-record split into a second
-    frame, so malformed lines surface as all-NULL rows and are DROPPED
-    here (conv_id null) rather than routed to a rejects sink. Turns that
-    arrive intact but fail the log grammar are still captured:
+    Same schema, options and ts coercion as the batch door
+    (``sources.feed``), with one difference: ``readStream`` has no second
+    frame for rejects, so malformed and conv_id-less lines are DROPPED
+    here (``feed.clean_turns``) rather than routed to a rejects sink.
+    Turns that arrive intact but fail the log grammar are still captured:
     ``streaming_route`` writes them to its ``rejects`` sink. Every
     downstream streaming operator consumes this stream unchanged (same
     TRANSCRIPT_SCHEMA columns)."""
-    from ..sources.jsonl import _TS_FMT, JSONL_SCHEMA
-
     raw = (
-        spark.readStream.schema(JSONL_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        spark.readStream.schema(FEED_SCHEMA)
+        .options(**PERMISSIVE, maxFilesPerTrigger=max_files_per_trigger)
         .json(path)
     )
-    return _clean_transcript_stream(raw, _TS_FMT)
+    return clean_turns(raw)
 
 
 def read_transcript_stream_csv(
     spark: SparkSession, path: str, max_files_per_trigger: int = 16
 ) -> DataFrame:
     """CSV-drop transcript stream — the spreadsheet-export sibling of
-    :func:`read_transcript_stream_jsonl`, same declared schema / ts
-    coercion / drop-malformed streaming contract as that door (and the
-    batch ``sources.csvfile`` null-vs-empty encoding). multiLine stays
-    FALSE here: a streaming file source should be splittable, so this
-    door requires newline-free ``text`` per record — feeds with embedded
-    newlines belong on the JSONL door, which encodes them natively.
+    :func:`read_transcript_stream_jsonl`, with the batch CSV door's
+    options (``csvfile.CSV_OPTIONS``: header, RFC-4180 escape, null vs
+    empty tokens) and the same drop-malformed streaming contract.
+    multiLine stays FALSE here: a streaming file source should be
+    splittable, so this door requires newline-free ``text`` per record —
+    feeds with embedded newlines belong on the JSONL door, which encodes
+    them natively.
 
     Every drop file needs a header row: the first line of each file is
     read as the header, so a headerless file silently loses its first
     record."""
-    from ..sources.csvfile import _NULL_TOKEN, _TS_FMT, CSV_SCHEMA
-
     raw = (
-        spark.readStream.schema(CSV_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("multiLine", False)
-        .option("escape", '"')
-        .option("nullValue", _NULL_TOKEN)
-        .option("emptyValue", "")
+        spark.readStream.schema(FEED_SCHEMA)
+        .options(
+            **CSV_OPTIONS,
+            multiLine=False,
+            maxFilesPerTrigger=max_files_per_trigger,
+        )
         .csv(path)
     )
-    return _clean_transcript_stream(raw, _TS_FMT)
+    return clean_turns(raw)
 
 
 def streaming_route(
@@ -150,7 +124,6 @@ def streaming_route(
     output_dir: str,
     checkpoint_dir: str,
     n_buckets: int = 32,
-    parse_engine: str = "pandas",
     cfg: RuntimeConfig = DEFAULT_CONFIG,
 ):
     """Run each micro-batch through the batch route body
@@ -167,8 +140,7 @@ def streaming_route(
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         route_turns(
             batch_df.withColumn("bucket", bucket_of("conv_id", n_buckets)),
-            output_dir, sink_counts={}, n_buckets=n_buckets,
-            parse_engine=parse_engine, cfg=cfg,
+            output_dir, sink_counts={}, n_buckets=n_buckets, cfg=cfg,
             partition_by={"batch_id": F.lit(batch_id)},
         )
 

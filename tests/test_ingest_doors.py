@@ -99,3 +99,67 @@ def test_doors_agree_on_hostile_fixture(spark, tmp_path):
     assert _reasons(spark, str(out / "rejects_csv")) == {
         "missing_conv_id": 1, "malformed_csv": 1,
     }
+
+
+TURNS_DDL = ("conv_id string, turn_idx int, role string, text string, "
+             "tool string, ts {}")
+
+
+def _schema(spark, ddl):
+    return spark.createDataFrame([], ddl).schema
+
+
+def _drain(stream, ckpt):
+    """Every row an availableNow drain of ``stream`` delivers, ``ts`` cast
+    to timestamp_ntz (the batch doors' type) in Spark before collect."""
+    rows = []
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda df, _: rows.extend(
+                df.withColumn("ts", F.col("ts").cast("timestamp_ntz")).collect()
+            )
+        )
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def test_door_contract_schemas_and_stream_drain(spark, tmp_path):
+    """The four text doors share one contract: batch turns carry ts as
+    timestamp_ntz, stream turns as timestamp, rejects are (raw, reason),
+    and each stream door drains exactly the clean turns its batch door
+    returns for the same feed."""
+    from log_analysis_system_spark.sources.csvfile import read_transcripts_csv
+    from log_analysis_system_spark.sources.jsonl import read_transcripts_jsonl
+    from log_analysis_system_spark.streaming.stream_pipeline import (
+        read_transcript_stream_csv,
+        read_transcript_stream_jsonl,
+    )
+
+    jsonl_dir, csv_dir = tmp_path / "jsonl", tmp_path / "csv"
+    jsonl_dir.mkdir()
+    csv_dir.mkdir()
+    _write_jsonl(jsonl_dir / "feed.jsonl", [*CLEAN, MISSING_CONV])
+    # the stream CSV door is multiLine=false: newline-free text only
+    flat = [(*r[:3], r[3] and r[3].replace("\n", " "), *r[4:]) for r in CLEAN]
+    _write_csv(csv_dir / "feed.csv", [*flat, MISSING_CONV])
+
+    batch_turns = _schema(spark, TURNS_DDL.format("timestamp_ntz"))
+    stream_turns = _schema(spark, TURNS_DDL.format("timestamp"))
+    rejects_schema = _schema(spark, "raw string, reason string not null")
+
+    for batch, stream, feed, clean_rows in (
+        (read_transcripts_jsonl, read_transcript_stream_jsonl, jsonl_dir, CLEAN),
+        (read_transcripts_csv, read_transcript_stream_csv, csv_dir, flat),
+    ):
+        turns, rejects = batch(spark, str(feed))
+        assert turns.schema == batch_turns
+        assert rejects.schema == rejects_schema
+        streamed = stream(spark, str(feed))
+        assert streamed.schema == stream_turns
+        want = _turn_set(turns)
+        assert len(want) == len(clean_rows)
+        assert _drain(streamed, str(tmp_path / f"ckpt_{feed.name}")) == want

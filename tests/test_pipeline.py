@@ -124,6 +124,36 @@ def test_aggregate_skip_ignores_failed_sink_probe(
         assert agg[0].row_count > 0
 
 
+def test_threat_scores_ignore_failed_row_sink_probe(
+    spark, transcripts, tmp_path_factory, monkeypatch
+):
+    """A failed ``table_exists`` probe of the routed row-event sinks must
+    not drop their attack/scan events from ``ip_threat_scores``: the route
+    of the same call counted rows there, so the read-back needs no
+    probe."""
+    row_sinks = ("security_events_high", "security_events_medium")
+    plain = str(tmp_path_factory.mktemp("threat_plain"))
+    res = run_pipeline(spark, transcripts, plain, "threat-1", n_buckets=8,
+                       resume=False)
+    assert all(res.sink_counts[s] > 0 for s in row_sinks)
+
+    real = catalog.table_exists
+    monkeypatch.setattr(
+        catalog, "table_exists",
+        lambda spark, base, name: name not in row_sinks and real(spark, base, name),
+    )
+    probed = str(tmp_path_factory.mktemp("threat_probe"))
+    run_pipeline(spark, transcripts, probed, "threat-2", n_buckets=8,
+                 resume=False)
+
+    def scores(out):
+        return sorted(_read(spark, out, "ip_threat_scores").collect())
+
+    want = scores(plain)
+    assert sum(r.n_attack + r.n_scan for r in want) > 0
+    assert scores(probed) == want
+
+
 def test_pipeline_resume_idempotent(spark, transcripts, tmp_path_factory):
     out = tmp_path_factory.mktemp("pipe_resume")
     # crash after the route stage
