@@ -26,6 +26,13 @@ import sys
 import uuid
 
 
+def _positive_int(v: str) -> int:
+    n = int(v)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def build_arg_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="python -m log_analysis_system_spark",
@@ -55,7 +62,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--config", default=None, help="config.yaml (reference schema)")
     p.add_argument("--patterns", default=None, help="patterns.yaml (reference schema)")
     p.add_argument("--suspicious-ips", default=None, help="suspicious_ips.txt")
-    p.add_argument("--buckets", type=int, default=32,
+    p.add_argument("--buckets", type=_positive_int, default=32,
                    help="conv_id hash buckets (lineage/resume granularity)")
     p.add_argument("--master", default=None,
                    help="spark master (default local[$SPARK_GRAFT_CPUS]); "

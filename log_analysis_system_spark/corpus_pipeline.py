@@ -128,19 +128,17 @@ def run_corpus_pipeline(
     """
     if keep_policy not in ("min_id", "longest"):
         raise ValueError(f"unknown keep_policy {keep_policy!r}")
-    done = (
-        st.completed_buckets(spark, output_dir, run_id, "corpus_score")
-        if resume
-        else set()
-    )
-    all_buckets = set(range(n_buckets))
-    pending = sorted(all_buckets - done)
-    result = CorpusResult(run_id, pending, sorted(done))
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
+    done = st.completed_buckets(spark, output_dir, run_id) if resume else {}
+    scored_buckets = done.get("corpus_score", {})
+    pending = sorted(set(range(n_buckets)) - set(scored_buckets))
+    result = CorpusResult(run_id, pending, sorted(scored_buckets))
 
     if pending:
         with st.StageTimer() as t:
             scored = score_projection(docs, n_buckets)
-            if done:
+            if scored_buckets:
                 scored = scored.where(F.col("bucket").isin(pending))
             # one shuffle into bucket layout (<=1 file per bucket), same as
             # the log pipeline's route stage
@@ -158,20 +156,16 @@ def run_corpus_pipeline(
                 )
             )
             result.sink_counts["doc_scores"] = sum(counts.values())
-        st.append_state(
-            spark, output_dir,
-            st.state_rows_from_counts(
-                run_id, "corpus_score", counts, t.wall_ms, set(pending)
-            ),
+        st.record_stage(
+            spark, output_dir, run_id, "corpus_score", t.wall_ms,
+            {b: counts.get(b, 0) for b in pending},
         )
         result.stages_ran.append("score")
 
     if fail_after_score:
         return result
 
-    if not (resume and -1 in st.completed_buckets(
-        spark, output_dir, run_id, "corpus_dedup"
-    )):
+    if -1 not in done.get("corpus_dedup", {}):
         with st.StageTimer() as t:
             comp = dd.dedup_components(docs)
             comp = comp.withColumn(
@@ -182,9 +176,8 @@ def run_corpus_pipeline(
                 partition_cols=["bucket"], mode="overwrite_partitions",
             )
             result.sink_counts["doc_components"] = n_comp
-        st.append_state(
-            spark, output_dir,
-            [(run_id, "corpus_dedup", -1, n_comp, "done", t.wall_ms)],
+        st.record_stage(
+            spark, output_dir, run_id, "corpus_dedup", t.wall_ms, {-1: n_comp}
         )
         result.stages_ran.append("dedup")
 
@@ -243,10 +236,9 @@ def run_corpus_pipeline(
         result.sink_counts["corpus_mixture"] = write_observed(
             mixture, output_dir, "corpus_mixture", mode="overwrite"
         )
-    st.append_state(
-        spark, output_dir,
-        [(run_id, "corpus_finalize", -1,
-          result.sink_counts["corpus_decisions"], "done", t.wall_ms)],
+    st.record_stage(
+        spark, output_dir, run_id, "corpus_finalize", t.wall_ms,
+        {-1: result.sink_counts["corpus_decisions"]},
     )
     result.stages_ran.append("finalize")
     return result

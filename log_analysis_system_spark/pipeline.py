@@ -58,10 +58,10 @@ ROW_SINKS_BY_SEVERITY = {
     "high": "security_events_high",
     "medium": "security_events_medium",
 }
+# nor does any aggregate detector, so no security_events_agg_low either
 AGG_SINKS_BY_SEVERITY = {
     "high": "security_events_agg_high",
     "medium": "security_events_agg_medium",
-    "low": "security_events_agg_low",
 }
 
 
@@ -94,6 +94,8 @@ def run_pipeline(
     aggregate stage over the existing ``parsed_turns`` sink (the
     reference's ``main.py --analyze-only`` semantics). ``cfg`` threads
     runtime-loaded thresholds/patterns into every stage."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
     if analyze_only:
         if not catalog.table_exists(spark, output_dir, "parsed_turns"):
             raise FileNotFoundError(
@@ -105,33 +107,23 @@ def run_pipeline(
         result.aggregate_ran = True
         return result
 
-    done = (
-        st.completed_buckets(spark, output_dir, run_id, "route") if resume else set()
-    )
-    all_buckets = set(range(n_buckets))
-    pending = sorted(all_buckets - done)
-    result = PipelineResult(run_id, pending, sorted(done))
+    done = st.completed_buckets(spark, output_dir, run_id) if resume else {}
+    routed = done.get("route", {})
+    pending = sorted(set(range(n_buckets)) - set(routed))
+    result = PipelineResult(run_id, pending, sorted(routed))
 
     if pending:
         bucketed = transcripts.withColumn("bucket", bucket_of("conv_id", n_buckets))
-        if done:
+        if routed:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
         _route_stage(spark, bucketed, output_dir, run_id, result,
-                     set(pending), n_buckets, cfg)
+                     pending, n_buckets, cfg)
 
-    if fail_after_route:
+    if fail_after_route or -1 in done.get("aggregate", {}):
         return result
-
-    agg_done = st.completed_buckets(spark, output_dir, run_id, "aggregate")
-    if resume and -1 in agg_done:
-        return result
-    # rows the route wrote to parsed_turns: this call's own count, or the
-    # state table's when resume skipped some buckets
-    parsed_rows = (
-        st.recorded_rows(spark, output_dir, run_id, "route")
-        if result.buckets_skipped
-        else result.sink_counts["parsed_turns"]
-    )
+    # rows in parsed_turns: the skipped buckets' recorded counts plus this
+    # call's own
+    parsed_rows = sum(routed.values()) + result.sink_counts.get("parsed_turns", 0)
     _aggregate_stage(spark, output_dir, run_id, result, n_buckets, cfg, parsed_rows)
     result.aggregate_ran = True
     return result
@@ -143,7 +135,7 @@ def _route_stage(
     output_dir: str,
     run_id: str,
     result: PipelineResult,
-    pending: set[int],
+    pending: list[int],
     n_buckets: int,
     cfg: RuntimeConfig = DEFAULT_CONFIG,
 ) -> None:
@@ -164,12 +156,9 @@ def _route_stage(
         # an empty dynamic-partition overwrite replaces nothing: skip it
         result.sink_counts["security_events_low"] = 0
 
-    st.append_state(
-        spark,
-        output_dir,
-        st.state_rows_from_counts(
-            run_id, "route", parsed_by_bucket, t.wall_ms, pending
-        ),
+    st.record_stage(
+        spark, output_dir, run_id, "route", t.wall_ms,
+        {b: parsed_by_bucket.get(b, 0) for b in pending},
     )
 
 
@@ -301,11 +290,7 @@ def _aggregate_stage(
     # record a permanently-done empty aggregate. ``None`` (analyze-only,
     # whose caller already found the sink) always aggregates.
     if parsed_rows == 0:
-        st.append_state(
-            spark,
-            output_dir,
-            [(run_id, "aggregate", -1, 0, "done", 0)],
-        )
+        st.record_stage(spark, output_dir, run_id, "aggregate", 0, {-1: 0})
         return
 
     with st.StageTimer() as t:
@@ -324,7 +309,7 @@ def _aggregate_stage(
         agg_events.persist(StorageLevel.MEMORY_AND_DISK)
         # Materialize BOTH caches with one job before the concurrent sink
         # fan-out (the detectors scan every parsed partition, so this count
-        # fills parsed's blocks too). Without it the 5 concurrent jobs race
+        # fills parsed's blocks too). Without it the concurrent sink jobs race
         # to compute the same cache blocks under the block-manager locks —
         # measured 2x wall-time on a cold cache. The route stage gets the
         # same effect from its lineage-count job.
@@ -343,27 +328,23 @@ def _aggregate_stage(
             )
         )
 
-        # Five independent full-overwrite sinks off the two persisted
-        # frames; concurrent submission lets the scheduler overlap them
-        # (cache blocks are computed once under Spark's block-level locks,
-        # whichever job touches a partition first).
-        def _observed_to(name: str, df: DataFrame) -> None:
-            result.sink_counts[name] = write_observed(df, output_dir, name)
+        # Independent full-overwrite sinks off the two persisted frames;
+        # concurrent submission lets the scheduler overlap them (cache
+        # blocks are computed once under Spark's block-level locks,
+        # whichever job touches a partition first). ``written`` holds the
+        # rows of this stage's own sinks, the lineage count it records.
+        written: dict[str, int] = {}
 
+        def _observed_to(name: str, df: DataFrame) -> None:
+            written[name] = write_observed(df, output_dir, name)
+
+        writes = [
+            (name, agg_events.where(F.col("severity") == severity))
+            for severity, name in AGG_SINKS_BY_SEVERITY.items()
+        ] + [("performance_metrics", metrics), ("anomalies", anomalies)]
         try:
-            with ThreadPoolExecutor(max_workers=5) as pool:
-                futures = [
-                    pool.submit(
-                        _observed_to, name,
-                        agg_events.where(F.col("severity") == severity),
-                    )
-                    for severity, name in AGG_SINKS_BY_SEVERITY.items()
-                ]
-                futures.append(
-                    pool.submit(_observed_to, "performance_metrics", metrics)
-                )
-                futures.append(pool.submit(_observed_to, "anomalies", anomalies))
-                for f in futures:
+            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+                for f in [pool.submit(_observed_to, *w) for w in writes]:
                     f.result()
 
             # threat scores over the union of all routed events. A sink this
@@ -382,9 +363,10 @@ def _aggregate_stage(
             if row_events is not None:
                 all_events = all_events.unionByName(row_events.drop("bucket"))
             scores = sec.ip_threat_scores(all_events, cfg)
-            result.sink_counts["ip_threat_scores"] = write_observed(
+            written["ip_threat_scores"] = write_observed(
                 scores, output_dir, "ip_threat_scores"
             )
+            result.sink_counts.update(written)
 
             high_events = all_events.where(F.col("severity") == "high")
             passed_alerts = st.throttle_alerts(
@@ -403,8 +385,7 @@ def _aggregate_stage(
             agg_events.unpersist()
             parsed.unpersist()
 
-    st.append_state(
-        spark,
-        output_dir,
-        [(run_id, "aggregate", -1, sum(result.sink_counts.values()), "done", t.wall_ms)],
+    st.record_stage(
+        spark, output_dir, run_id, "aggregate", t.wall_ms,
+        {-1: sum(written.values())},
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -156,23 +157,26 @@ def table_exists(spark: SparkSession, base_dir: str, name: str) -> bool:
     # s3a://...): the common not-there case must not go through
     # read.parquet + catch, whose caught AnalysisException the JVM logs at
     # ERROR level. Only when the directory exists with visible entries do
-    # we confirm it is actually a READABLE parquet table (a half-written
-    # dir — e.g. only empty bucket= subdirs — would pass a pure listing
-    # check and then crash the caller's read). Any error, filesystem or
-    # parquet, means "not usable as a table": return False, as callers
-    # treat this as skip-the-sink.
-    try:
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{name}")
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(path):
-            return False
-        if not any(
-            not s.getPath().getName().startswith(("_", "."))
-            for s in fs.listStatus(path)
-        ):
-            return False
-        spark.read.parquet(f"{base_dir}/{name}").schema
-        return True
-    except Exception:  # noqa: BLE001
+    # we confirm it is actually a READABLE parquet table. False means
+    # absent, and only that: no path, no visible entries, or a dir holding
+    # no schema-bearing files (an empty bucket-partitioned write leaves only
+    # empty bucket= subdirs, on which Spark raises UNABLE_TO_INFER_SCHEMA).
+    # Any other filesystem or parquet error propagates: callers skip an
+    # absent table, and must not skip one they merely failed to read.
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{name}")
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
         return False
+    if not any(
+        not s.getPath().getName().startswith(("_", "."))
+        for s in fs.listStatus(path)
+    ):
+        return False
+    try:
+        spark.read.parquet(f"{base_dir}/{name}").schema
+    except AnalysisException as e:
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
+            return False
+        raise
+    return True

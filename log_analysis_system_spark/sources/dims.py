@@ -12,24 +12,22 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import STATUS_DESCRIPTIONS, SUSPICIOUS_IPS
+from ..config import STATUS_DESCRIPTIONS
 
 
-@lru_cache(maxsize=8)
+@lru_cache(maxsize=6)
 def _dim_cache(spark: SparkSession, which: str) -> DataFrame:
     """Per-session memo for the tiny dim frames: createDataFrame pays a
     Python->JVM round trip per call, and the registry/pipeline re-enrich
     many times per session. Keyed on the session so a stopped session's
-    frames are never reused (max 8 entries = 4 dims x 2 sessions)."""
+    frames are never reused (max 6 entries = 3 dims x 2 sessions)."""
     if which == "role":
         return spark.createDataFrame(ROLE_DIM, ["role", "role_class", "role_weight"])
     if which == "tool":
         return spark.createDataFrame(TOOL_DIM, ["tool", "tool_family", "is_sensitive"])
-    if which == "status":
-        return spark.createDataFrame(
-            sorted(STATUS_DESCRIPTIONS.items()), ["status", "status_description"]
-        )
-    return spark.createDataFrame([(ip,) for ip in SUSPICIOUS_IPS], ["ip_address"])
+    return spark.createDataFrame(
+        sorted(STATUS_DESCRIPTIONS.items()), ["status", "status_description"]
+    )
 
 ROLE_DIM = [
     # role, role_class, weight
@@ -59,11 +57,6 @@ def tool_dim(spark: SparkSession) -> DataFrame:
 def status_dim(spark: SparkSession) -> DataFrame:
     """J2: status-code description map (dashboard.py:205-221)."""
     return _dim_cache(spark, "status")
-
-
-def suspicious_ip_dim(spark: SparkSession) -> DataFrame:
-    """S5: known-bad actor lookup (config/suspicious_ips.txt:5-13)."""
-    return _dim_cache(spark, "suspicious")
 
 
 def enrich(parsed: DataFrame) -> DataFrame:

@@ -3,9 +3,13 @@
 No reference analog — the reference's rerun story is 'append again'
 (``database.py:172`` ``if_exists='append'`` duplicates on rerun; SURVEY §4).
 Here every stage appends ``(run_id, stage, bucket, row_count, status,
-wall_ms)`` rows to a state table; a resumed run anti-joins completed buckets
-and rewrites only the rest, with dynamic-partition-overwrite sinks making the
-rewrite idempotent.
+wall_ms)`` rows to a state table through ``record_stage`` (per-bucket
+stages one row per bucket they ran, global stages one ``bucket = -1``
+row). A resumed run reads the table once, ``completed_buckets``, and that
+one snapshot answers every resume question of the run: which buckets are
+still pending, whether a global stage is done, and how many rows the
+skipped buckets hold. Only the pending buckets are rewritten, with
+dynamic-partition-overwrite sinks making the rewrite idempotent.
 
 Alert throttling (notifier.py:50-77, throttle_period config.yaml:49) is the
 one stateful-streaming-shaped reference behavior; in batch it becomes a join
@@ -60,39 +64,43 @@ def append_state(
 
 
 def completed_buckets(
-    spark: SparkSession, base_dir: str, run_id: str, stage: str
-) -> set[int]:
+    spark: SparkSession, base_dir: str, run_id: str
+) -> dict[str, dict[int, int]]:
+    """``{stage: {bucket: row_count}}`` over the run's ``done`` rows, read
+    with one collect and no shuffle (a run's rows are few, so they are
+    folded here). A bucket recorded more than once (a ``resume=False``
+    rerun of the same run id) keeps its largest count."""
     if not catalog.table_exists(spark, base_dir, "state_metrics"):
-        return set()
-    st = catalog.read_table(spark, base_dir, "state_metrics")
+        return {}
     rows = (
-        st.where(
-            (F.col("run_id") == run_id)
-            & (F.col("stage") == stage)
-            & (F.col("status") == "done")
-        )
-        .select("bucket")
-        .distinct()
+        catalog.read_table(spark, base_dir, "state_metrics")
+        .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .select("stage", "bucket", "row_count")
         .collect()
     )
-    return {r.bucket for r in rows}
+    done: dict[str, dict[int, int]] = {}
+    for r in rows:
+        stage = done.setdefault(r.stage, {})
+        stage[r.bucket] = max(stage.get(r.bucket, 0), r.row_count)
+    return done
 
 
-def recorded_rows(spark: SparkSession, base_dir: str, run_id: str, stage: str) -> int:
-    """Rows a run's completed ``stage`` buckets recorded, each bucket once.
-    Reads the state table without an existence probe: callers ask only
-    after ``completed_buckets`` found rows, so a failed read is loud."""
-    st = catalog.read_table(spark, base_dir, "state_metrics")
-    per_bucket = (
-        st.where(
-            (F.col("run_id") == run_id)
-            & (F.col("stage") == stage)
-            & (F.col("status") == "done")
-        )
-        .groupBy("bucket")
-        .agg(F.max("row_count").alias("n"))
+def record_stage(
+    spark: SparkSession,
+    base_dir: str,
+    run_id: str,
+    stage: str,
+    wall_ms: int,
+    counts: dict[int, int],
+) -> None:
+    """Append one ``done`` row per bucket of ``counts`` (``{-1: n}`` for a
+    global stage), all stamped with the stage's ``wall_ms``."""
+    append_state(
+        spark,
+        base_dir,
+        [(run_id, stage, int(b), int(n), "done", int(wall_ms))
+         for b, n in sorted(counts.items())],
     )
-    return int(per_bucket.agg(F.sum("n")).collect()[0][0] or 0)
 
 
 def bucket_counts(df: DataFrame, bucket_col: str = "bucket") -> dict[int, int]:
@@ -102,15 +110,6 @@ def bucket_counts(df: DataFrame, bucket_col: str = "bucket") -> dict[int, int]:
         r[bucket_col]: r["cnt"]
         for r in df.groupBy(bucket_col).agg(F.count("*").alias("cnt")).collect()
     }
-
-
-def state_rows_from_counts(
-    run_id: str, stage: str, counts: dict[int, int], wall_ms: int, all_buckets: set[int]
-) -> list[tuple[str, str, int, int, str, int]]:
-    rows = []
-    for b in sorted(all_buckets):
-        rows.append((run_id, stage, int(b), int(counts.get(b, 0)), "done", wall_ms))
-    return rows
 
 
 class StageTimer:

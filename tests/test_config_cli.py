@@ -183,6 +183,16 @@ def test_cli_corpus_requires_input():
     assert exc.value.code == 2  # argparse error, not a TypeError crash
 
 
+@pytest.mark.parametrize("buckets", ["0", "-3"])
+def test_cli_rejects_buckets_below_one(buckets, capsys):
+    from log_analysis_system_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", "/unused", "--output", "/tmp/x", "--buckets", buckets])
+    assert exc.value.code == 2
+    assert "--buckets" in capsys.readouterr().err
+
+
 def test_load_input_sniffs_parquet_magic(spark, tmp_path):
     """A parquet transcripts file without the .parquet suffix must be read
     as parquet (PAR1 magic), not mis-ingested as raw log text."""

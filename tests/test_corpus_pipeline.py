@@ -114,6 +114,30 @@ def test_resume_skips_completed_buckets(spark, docs, tmp_path_factory):
     assert catalog.read_table(spark, str(out), "corpus_decisions").count() == n
 
 
+def test_resume_reads_state_once(spark, docs, tmp_path_factory, monkeypatch):
+    from log_analysis_system_spark import state as st
+
+    out = str(tmp_path_factory.mktemp("corpus_state_reads"))
+    run_corpus_pipeline(spark, docs, out, "crun3", n_buckets=4,
+                        fail_after_score=True)
+    calls = []
+    real = st.completed_buckets
+
+    def counted(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(st, "completed_buckets", counted)
+    res = run_corpus_pipeline(spark, docs, out, "crun3", n_buckets=4)
+    assert res.stages_ran == ["dedup", "finalize"]
+    assert len(calls) == 1
+
+
+def test_corpus_rejects_buckets_below_one(spark, docs, tmp_path):
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_corpus_pipeline(spark, docs, str(tmp_path), "c0", n_buckets=0)
+
+
 def test_mixture_covers_only_kept(spark, docs, run):
     out, _ = run
     dec = _read(spark, out, "corpus_decisions")

@@ -6,8 +6,10 @@ from __future__ import annotations
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from log_analysis_system_spark import state as st
 from log_analysis_system_spark.datagen.transcripts import synth_transcripts
 from log_analysis_system_spark.functions.parse import parse_transcripts
 from log_analysis_system_spark.operators import security as sec
@@ -92,6 +94,8 @@ def test_pipeline_fanout_counts(spark, transcripts, tmp_path_factory):
         assert all(len(fs) == 1 for fs in files.values()), (sink, files)
     assert not (out / "security_events_low").exists()
     assert res.sink_counts["security_events_low"] == 0
+    # no aggregate detector emits low severity either
+    assert not (out / "security_events_agg_low").exists()
 
 
 def test_aggregate_skip_ignores_failed_sink_probe(
@@ -178,9 +182,77 @@ def test_pipeline_resume_idempotent(spark, transcripts, tmp_path_factory):
     assert _read(spark, out, "parsed_turns").count() == n_parsed
 
 
-def test_alert_throttling(spark, transcripts, tmp_path_factory):
-    from log_analysis_system_spark import state as st
+def test_resume_reads_state_once_and_records_same_lineage(
+    spark, transcripts, tmp_path_factory, monkeypatch
+):
+    """A run reads the state table at most once, and only to resume; the
+    aggregate's state row counts its own sink rows, so a fresh run and a
+    crashed-then-resumed run of the same input record the same count."""
+    calls = []
+    real = st.completed_buckets
 
+    def counted(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(st, "completed_buckets", counted)
+    fresh = str(tmp_path_factory.mktemp("lineage_fresh"))
+    run_pipeline(spark, transcripts, fresh, "lin-1", n_buckets=8, resume=False)
+    assert calls == []
+
+    resumed = str(tmp_path_factory.mktemp("lineage_resume"))
+    run_pipeline(spark, transcripts, resumed, "lin-2", n_buckets=8,
+                 fail_after_route=True)
+    calls.clear()
+    res = run_pipeline(spark, transcripts, resumed, "lin-2", n_buckets=8)
+    assert len(calls) == 1
+    assert res.buckets_processed == [] and res.aggregate_ran
+
+    def aggregate_rows(out):
+        return [
+            r.row_count
+            for r in _read(spark, out, "state_metrics")
+            .where(F.col("stage") == "aggregate")
+            .collect()
+        ]
+
+    assert aggregate_rows(fresh) == aggregate_rows(resumed)
+    assert aggregate_rows(fresh)[0] > 0
+
+
+def test_pipeline_rejects_buckets_below_one(spark, transcripts, tmp_path):
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_pipeline(spark, transcripts, str(tmp_path), "nb-0", n_buckets=0)
+
+
+def test_table_exists_is_loud_on_unreadable_tables(spark, tmp_path):
+    """``table_exists`` answers False only for an absent table; a corrupt
+    part file raises instead of reading as absent."""
+    base = str(tmp_path)
+    assert not catalog.table_exists(spark, base, "missing")
+    # an empty bucket-partitioned write leaves only empty bucket= dirs
+    os.makedirs(tmp_path / "hollow" / "bucket=0")
+    os.makedirs(tmp_path / "hollow" / "bucket=1")
+    assert not catalog.table_exists(spark, base, "hollow")
+    os.makedirs(tmp_path / "corrupt")
+    (tmp_path / "corrupt" / "part-0.parquet").write_text("not parquet")
+    with pytest.raises(Py4JJavaError):
+        catalog.table_exists(spark, base, "corrupt")
+
+
+def test_throttle_alerts_raises_on_corrupt_alert_state(spark, tmp_path):
+    """A corrupt alert-state table must not read as 'no alert sent yet',
+    which would let every alert type through again."""
+    os.makedirs(tmp_path / "alert_state")
+    (tmp_path / "alert_state" / "part-0.parquet").write_text("not parquet")
+    alerts = spark.createDataFrame(
+        [("attack", 1_000_000)], "event_type string, event_ts long"
+    ).withColumn("event_ts", F.col("event_ts").cast("timestamp"))
+    with pytest.raises(Py4JJavaError):
+        st.throttle_alerts(spark, str(tmp_path), alerts, "r1", now_epoch=1_000_000)
+
+
+def test_alert_throttling(spark, transcripts, tmp_path_factory):
     out = tmp_path_factory.mktemp("alerts")
     parsed = parse_transcripts(transcripts)
     events = sec.all_security_events(parsed)
