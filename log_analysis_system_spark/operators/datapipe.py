@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.texthash import md5_hash60, tokens
+from ..sources.dims import local_frame
 from . import dedup as dd
 from .textstats import quality_scores
 
@@ -143,7 +144,7 @@ def sequence_pack(
     for row in sorted(totals.collect(), key=lambda r: r["pid"]):
         offsets.append((row["pid"], acc))
         acc += row["part_total"]
-    off_df = spark.createDataFrame(offsets, "pid int, part_offset long")
+    off_df = local_frame(spark, offsets, "pid int, part_offset long")
     start = F.col("part_offset") + F.col("local_cum") - F.col("n_tokens")
     end = F.col("part_offset") + F.col("local_cum")
     return (

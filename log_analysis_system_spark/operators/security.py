@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, RuntimeConfig
+from ..sources.dims import local_frame
 from .performance import access_rows
 
 def _ORDER_KEY() -> Column:
@@ -84,8 +85,8 @@ def scan_events(
 def suspicious_ip_dim(spark, cfg: RuntimeConfig = DEFAULT_CONFIG) -> DataFrame:
     """S5/J1: the suspicious-IP lookup as a broadcast dimension
     (config/suspicious_ips.txt via security.py:50-82)."""
-    return spark.createDataFrame(
-        [(ip,) for ip in cfg.suspicious_ips], ["ip_address"]
+    return local_frame(
+        spark, [(ip,) for ip in cfg.suspicious_ips], "ip_address string"
     )
 
 

@@ -20,6 +20,7 @@ import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def table_format() -> str:
@@ -144,10 +145,18 @@ def compact_table(
     return n
 
 
-def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
+def read_table(
+    spark: SparkSession,
+    base_dir: str,
+    name: str,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """``schema``: the table's declared schema, given so the parquet read
+    skips the schema-inference job (the iceberg catalog holds its own)."""
     if table_format() == "iceberg":
         return spark.read.table(f"graft.{name}")
-    return spark.read.parquet(f"{base_dir}/{name}")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{base_dir}/{name}")
 
 
 def table_exists(spark: SparkSession, base_dir: str, name: str) -> bool:

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from .config import DEFAULT_CONFIG, RuntimeConfig
 from .sources import catalog
+from .sources.dims import local_frame
 
 STATE_SCHEMA = StructType(
     [
@@ -59,7 +60,7 @@ def append_state(
     base_dir: str,
     rows: list[tuple[str, str, int, int, str, int]],
 ) -> None:
-    df = spark.createDataFrame(rows, STATE_SCHEMA)
+    df = local_frame(spark, rows, STATE_SCHEMA)
     catalog.write_table(df, base_dir, "state_metrics", mode="append")
 
 
@@ -73,7 +74,7 @@ def completed_buckets(
     if not catalog.table_exists(spark, base_dir, "state_metrics"):
         return {}
     rows = (
-        catalog.read_table(spark, base_dir, "state_metrics")
+        catalog.read_table(spark, base_dir, "state_metrics", STATE_SCHEMA)
         .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("stage", "bucket", "row_count")
         .collect()
@@ -148,7 +149,7 @@ def throttle_alerts(
 
     if catalog.table_exists(spark, base_dir, "alert_state"):
         st = (
-            catalog.read_table(spark, base_dir, "alert_state")
+            catalog.read_table(spark, base_dir, "alert_state", ALERT_STATE_SCHEMA)
             .groupBy("alert_type")
             .agg(F.max("last_sent_epoch").alias("last_sent_epoch"))
         )
@@ -163,7 +164,7 @@ def throttle_alerts(
 
     sent = passed.select(
         "alert_type",
-        F.lit(now_epoch).alias("last_sent_epoch"),
+        F.lit(now_epoch).cast("long").alias("last_sent_epoch"),
         F.lit(run_id).alias("run_id"),
     )
     catalog.write_table(sent, base_dir, "alert_state", mode="append")

@@ -220,6 +220,23 @@ def test_resume_reads_state_once_and_records_same_lineage(
     assert aggregate_rows(fresh)[0] > 0
 
 
+def test_completed_buckets_reads_state_with_declared_schema(spark, tmp_path):
+    """The state table is read under ``STATE_SCHEMA``: one resume read is
+    the ``table_exists`` probe plus the collect, with no schema-inference
+    job between them."""
+    base = str(tmp_path)
+    st.record_stage(spark, base, "r1", "route", 5, {0: 3, 1: 4})
+    st.record_stage(spark, base, "r1", "aggregate", 6, {-1: 7})
+    sc = spark.sparkContext
+    sc.setJobGroup("completed-buckets-jobs", "count state-read jobs")
+    try:
+        done = st.completed_buckets(spark, base, "r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done == {"route": {0: 3, 1: 4}, "aggregate": {-1: 7}}
+    assert len(sc.statusTracker().getJobIdsForGroup("completed-buckets-jobs")) == 2
+
+
 def test_pipeline_rejects_buckets_below_one(spark, transcripts, tmp_path):
     with pytest.raises(ValueError, match="n_buckets"):
         run_pipeline(spark, transcripts, str(tmp_path), "nb-0", n_buckets=0)

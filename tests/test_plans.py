@@ -206,13 +206,71 @@ def test_shingle_pipelines_never_inline_the_tokenizer(spark, registry):
 
 
 def test_dim_frames_are_memoized_per_session(spark):
-    """createDataFrame pays a Python->JVM round trip per call; the four
-    tiny dim frames are lru_cached per (session, name) so repeated enrich
+    """createDataFrame pays a Python->JVM round trip per call; the three
+    tiny dim frames are memoized per (SparkContext, name) so repeated enrich
     calls reuse one frame."""
     from log_analysis_system_spark.sources import dims
 
     assert dims.status_dim(spark) is dims.status_dim(spark)
     assert dims.role_dim(spark) is dims.role_dim(spark)
+
+
+def test_list_built_tables_plan_as_local_tables(spark, monkeypatch):
+    """The role/tool/status dims, the suspicious-IP dim and the state rows
+    are JVM ``LocalTableScan``s even with Arrow off: a pickled Python RDD
+    (``Scan ExistingRDD``) starts Python workers in every query that
+    reads it. Each table keeps its column types and rows."""
+    from pyspark.sql.types import DataType
+
+    from log_analysis_system_spark import state as st
+    from log_analysis_system_spark.config import DEFAULT_CONFIG, STATUS_DESCRIPTIONS
+    from log_analysis_system_spark.functions.parse import parse_transcripts
+    from log_analysis_system_spark.operators import security as sec
+    from log_analysis_system_spark.queries_log import load_transcripts
+    from log_analysis_system_spark.sources import catalog, dims
+
+    def physical(df):
+        return spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(arrow)
+    spark.conf.set(arrow, "false")
+    dims._context_dims.cache_clear()
+    try:
+        parsed = parse_transcripts(load_transcripts(spark, SF))
+        written = []
+        monkeypatch.setattr(
+            catalog, "write_table", lambda df, *a, **kw: written.append(df)
+        )
+        state_rows = [("r1", "route", 0, 5, "done", 7),
+                      ("r1", "aggregate", -1, 9, "done", 8)]
+        st.append_state(spark, "unused", state_rows)
+        for df in (dims.enrich(parsed), sec.suspicious_ip_events(parsed), written[0]):
+            plan = physical(df)
+            assert "LocalTableScan" in plan
+            assert "ExistingRDD" not in plan
+
+        expected = [
+            (dims.role_dim(spark),
+             "role string, role_class string, role_weight bigint", dims.ROLE_DIM),
+            (dims.tool_dim(spark),
+             "tool string, tool_family string, is_sensitive boolean", dims.TOOL_DIM),
+            (dims.status_dim(spark), "status bigint, status_description string",
+             list(STATUS_DESCRIPTIONS.items())),
+            (sec.suspicious_ip_dim(spark), "ip_address string",
+             [(ip,) for ip in DEFAULT_CONFIG.suspicious_ips]),
+            (written[0], st.STATE_SCHEMA, state_rows),
+        ]
+        for df, schema, rows in expected:
+            if isinstance(schema, str):
+                schema = DataType.fromDDL(schema)
+            assert df.schema == schema
+            assert sorted(tuple(r) for r in df.collect()) == sorted(rows)
+    finally:
+        spark.conf.set(arrow, prior)
+        dims._context_dims.cache_clear()
 
 
 def test_timeframe_filter_runs_before_shuffle(spark, registry):

@@ -118,14 +118,65 @@ def test_streaming_route_matches_batch_under_runtime_config(spark, stream_dirs):
     assert high.where(~F.col("endpoint").rlike("/admin/login|/checkout")).isEmpty()
 
 
+def _write_jsonl_drops(spark, feed_dir, n, per_drop=200):
+    """Write ``n`` JSONL drop files of ``per_drop`` sf0.001 turns each,
+    with mtimes in drop order (the file source orders drops by mtime:
+    drop0 is batch 0). Returns the feed directory."""
+    import json
+    import os
+    import pathlib
+
+    rows = load_transcripts(spark, SF).limit(n * per_drop).collect()
+    feed = pathlib.Path(feed_dir)
+    feed.mkdir(parents=True)
+    for i in range(n):
+        drop = feed / f"drop{i}.jsonl"
+        with open(drop, "w") as f:
+            for r in rows[i * per_drop:(i + 1) * per_drop]:
+                f.write(json.dumps({
+                    "conv_id": r.conv_id, "turn_idx": r.turn_idx,
+                    "role": r.role, "text": r.text, "tool": r.tool,
+                    "ts": r.ts.isoformat() if r.ts else None,
+                }) + "\n")
+        os.utime(drop, (1_700_000_000 + i, 1_700_000_000 + i))
+    return feed
+
+
+def test_streaming_route_builds_each_dim_once(spark, stream_dirs, monkeypatch):
+    """Every foreachBatch micro-batch runs on a fresh clone of the
+    session; the dim memo is keyed on the SparkContext they share, so
+    draining three drops builds each of the three enrich dims once."""
+    from log_analysis_system_spark.sources import dims
+    from log_analysis_system_spark.streaming.stream_pipeline import (
+        read_transcript_stream_jsonl,
+    )
+
+    feed = _write_jsonl_drops(spark, stream_dirs["in"], 3)
+    built = []
+    real = dims.local_frame
+
+    def counted(spark, rows, schema):
+        built.append(schema)
+        return real(spark, rows, schema)
+
+    dims._context_dims.cache_clear()
+    monkeypatch.setattr(dims, "local_frame", counted)
+    q = streaming_route(
+        read_transcript_stream_jsonl(spark, str(feed), max_files_per_trigger=1),
+        stream_dirs["out"], stream_dirs["ckpt"],
+    )
+    assert q.awaitTermination(300)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    assert sorted(built) == sorted(schema for _, schema in dims._DIMS.values())
+    assert spark.read.parquet(f"{stream_dirs['out']}/parsed_turns").count() > 0
+
+
 def test_streaming_route_sinks_partition_by_batch_id(spark, stream_dirs):
     """Micro-batch sinks are partitioned by ``batch_id`` alone: no
     ``bucket=`` dirs, one part file per micro-batch per sink (each JSONL
     drop is one input partition), ``bucket`` kept as a column with the
     batch route's value, and a replayed micro-batch replaces its own
     ``batch_id=`` partition instead of adding rows."""
-    import json as _json
-    import os
     import pathlib
 
     from log_analysis_system_spark.pipeline import bucket_of, route_turns
@@ -135,21 +186,7 @@ def test_streaming_route_sinks_partition_by_batch_id(spark, stream_dirs):
         read_transcript_stream_jsonl,
     )
 
-    rows = load_transcripts(spark, SF).limit(600).collect()
-    feed = pathlib.Path(stream_dirs["in"])
-    feed.mkdir(parents=True)
-    for i in range(3):
-        drop = feed / f"drop{i}.jsonl"
-        with open(drop, "w") as f:
-            for r in rows[i * 200:(i + 1) * 200]:
-                f.write(_json.dumps({
-                    "conv_id": r.conv_id, "turn_idx": r.turn_idx,
-                    "role": r.role, "text": r.text, "tool": r.tool,
-                    "ts": r.ts.isoformat() if r.ts else None,
-                }) + "\n")
-        # the file source orders drops by mtime: drop0 is batch 0
-        os.utime(drop, (1_700_000_000 + i, 1_700_000_000 + i))
-
+    feed = _write_jsonl_drops(spark, stream_dirs["in"], 3)
     out = stream_dirs["out"]
     q = streaming_route(
         read_transcript_stream_jsonl(spark, str(feed), max_files_per_trigger=1),
