@@ -79,12 +79,12 @@ def _ingest_feed(spark, reader, parts, output_dir, kind: str):
     when the pipeline reads the returned ``turns``."""
     turns, rejects = reader(spark, parts)
     if output_dir:
-        # one write job, no eager pre-count (a rejects.count() here would
-        # be a third full scan of the feed); the row count afterwards
-        # reads only parquet footers
+        from .pipeline import write_observed
+
+        # one write job that counts its own rows (a rejects.count() here
+        # would be a third full scan of the feed)
         rej_dir = os.path.join(output_dir, f"rejects_{kind}")
-        rejects.write.mode("overwrite").parquet(rej_dir)
-        n_rej = spark.read.parquet(rej_dir).count()
+        n_rej = write_observed(rejects, output_dir, f"rejects_{kind}")
         if n_rej:
             print(f"{kind} ingest: {n_rej} rejected rows "
                   f"(malformed or missing conv_id) -> {rej_dir}",

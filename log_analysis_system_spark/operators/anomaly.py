@@ -20,13 +20,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, RuntimeConfig
-from .performance import access_rows, error_rate_by_interval, traffic_by_interval
-
-
-def _det_mean(col: str):
-    """Order-independent mean of a 3-decimal metric: exact decimal sum,
-    one float division (vs avg()'s order-dependent float accumulation)."""
-    return F.sum(F.col(col).cast("decimal(18,3)")).cast("double") / F.count(col)
+from .performance import (
+    access_rows,
+    det_mean,
+    error_rate_by_interval,
+    traffic_by_interval,
+)
 
 
 def response_time_zscore_anomalies(
@@ -42,7 +41,7 @@ def response_time_zscore_anomalies(
     # boundaries nondeterministically (observed: a mean 3e-11 from a
     # boundary flipping with partition order)
     stats = rows.agg(
-        _det_mean("response_time").alias("mu"),
+        det_mean("response_time").alias("mu"),
         F.stddev_pop("response_time").alias("sigma"),
         F.count("*").alias("n"),
     )

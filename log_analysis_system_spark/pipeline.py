@@ -15,24 +15,28 @@ engineering the north rule demands:
   * ``route`` (per-bucket, resumable bucket-by-bucket): parse + enrich +
     per-ROW detectors (attack/scan patterns — embarrassingly parallel),
     fanned out to parsed/error/reject sinks and to each detector's
-    severity sink, one persisted frame feeding every sink. The body
-    (``route_turns``) is shared with ``streaming_route``, whose
-    micro-batches partition every sink by ``batch_id`` instead of
-    ``bucket`` (one file per sink per input partition, ``bucket`` kept as
-    a column: replay is keyed on ``batch_id``, and per-bucket resume is a
-    batch concern); the batch stage adds only the bucket shuffle and the
-    state rows;
+    severity sink, one persisted frame feeding every sink and each sink
+    counted inside its own write. The body (``route_turns``) is shared
+    with ``streaming_route``, whose micro-batches partition every sink by
+    ``batch_id`` instead of ``bucket`` (one file per sink per input
+    partition, ``bucket`` kept as a column: replay is keyed on
+    ``batch_id``, and per-bucket resume is a batch concern); the batch
+    stage adds only the bucket shuffle and the state rows;
   * ``aggregate`` (global, all-or-nothing): reads BACK the completed
-    parsed_turns sink (never recomputes parse) and runs the group-by
-    detectors (suspicious IP / brute force / unusual method — global by
-    definition: partial-bucket counts would be wrong), performance metrics
-    and anomaly operators, full-overwrite sinks;
+    parsed_turns sink (never recomputes parse) and reads no other sink.
+    It runs the group-by detectors (suspicious IP / brute force / unusual
+    method — global by definition: partial-bucket counts would be wrong),
+    performance metrics and anomaly operators, and scores IP threat over
+    all five detectors, the row detectors rerun over the parsed rows as
+    the reference does; full-overwrite sinks;
 
 - **idempotence**: bucket sinks use dynamic-partition overwrite; rerunning
   a straggler bucket replaces its partition (the reference's rerun story
   appends duplicates — ``database.py:172``);
-- **lineage/metrics**: per-bucket row counts per sink appended to the
-  checkpointed state table.
+- **lineage/metrics**: every sink's row count is observed inside its own
+  write; the route's per-bucket ``parsed_turns`` counts and the
+  aggregate's total sink rows are appended to the checkpointed state
+  table.
 """
 
 from __future__ import annotations
@@ -53,12 +57,7 @@ from .operators import security as sec
 from .sources import catalog
 from .sources.dims import enrich
 
-# no row detector emits low severity, so no route writes security_events_low
-ROW_SINKS_BY_SEVERITY = {
-    "high": "security_events_high",
-    "medium": "security_events_medium",
-}
-# nor does any aggregate detector, so no security_events_agg_low either
+# no aggregate detector emits low severity, so no security_events_agg_low
 AGG_SINKS_BY_SEVERITY = {
     "high": "security_events_agg_high",
     "medium": "security_events_agg_medium",
@@ -153,7 +152,8 @@ def _route_stage(
             bucketed.repartitionById(n_tasks, "bucket"), output_dir,
             result.sink_counts, n_buckets, cfg,
         )
-        # an empty dynamic-partition overwrite replaces nothing: skip it
+        # no row detector emits low severity, so no route writes
+        # security_events_low; its count is 0
         result.sink_counts["security_events_low"] = 0
 
     st.record_stage(
@@ -178,9 +178,9 @@ def route_turns(
     as every sink's partition spec to their values (a micro-batch's
     ``batch_id``, so each sink writes one file per input partition, not one
     per bucket); without it the sinks partition by ``bucket``. ``bucket``
-    stays a column of every sink either way. Sets each sink's row count in
-    ``sink_counts`` and returns the ``parsed_turns`` row count per
-    bucket."""
+    stays a column of every sink either way. Each sink's row count is
+    observed inside its own write and set in ``sink_counts``; returns the
+    ``parsed_turns`` row count per bucket."""
     partition_by = partition_by or {}
     partition_cols = list(partition_by) or ["bucket"]
     enriched = enrich(
@@ -188,23 +188,10 @@ def route_turns(
     ).withColumns(partition_by)
     enriched.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # one grouped-count job covers parsed/error/reject lineage metrics
-        # and fills enriched's cache before the concurrent fan-out
-        cat = (
-            F.when(F.col("log_type") == "access", F.lit("parsed_turns"))
-            .when(F.col("log_type") == "error", F.lit("error_turns"))
-            .otherwise(F.lit("rejects"))
-        )
-        cat_rows = (
-            enriched.groupBy("bucket", cat.alias("cat"))
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        counts: dict[str, dict[int, int]] = {}
-        for r in cat_rows:
-            counts.setdefault(r["cat"], {})[r["bucket"]] = r["cnt"]
-
         access = enriched.where(F.col("log_type") == "access").drop("ts")
+        # the per-bucket parsed_turns lineage: the one job that also fills
+        # enriched's cache before the concurrent fan-out
+        parsed_by_bucket = st.bucket_counts(access)
         errors = enriched.where(F.col("log_type") == "error").select(
             *partition_by, "bucket", "conv_id", "turn_idx", "ts_parsed",
             "level", "module", "pid", "message", "text",
@@ -213,48 +200,39 @@ def route_turns(
             *partition_by, "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
             "text",
         )
-
-        # idempotent writes: a rerun bucket (or a replayed micro-batch)
-        # replaces its own partitions
-        def counted(name: str, df: DataFrame) -> None:
-            catalog.write_table(
-                df, output_dir, name, partition_cols=partition_cols,
-                mode="overwrite_partitions",
-            )
-            sink_counts[name] = sum(counts.get(name, {}).values())
-
         # per-row detectors only (global detectors run in the aggregate
         # stage). Attack patterns are always high severity and scans always
         # medium, so each feeds its own sink; no row detector emits low.
-        def observed(name: str, events: DataFrame) -> None:
-            events = events.withColumns(
-                {**partition_by, "bucket": bucket_of("conv_id", n_buckets)}
-            )
+        event_cols = {**partition_by, "bucket": bucket_of("conv_id", n_buckets)}
+        writes = {
+            "parsed_turns": access,
+            "error_turns": errors,
+            "rejects": rejects,
+            "security_events_high":
+                sec.attack_events(enriched, cfg).withColumns(event_cols),
+            "security_events_medium":
+                sec.scan_events(enriched, cfg).withColumns(event_cols),
+        }
+
+        # idempotent writes: a rerun bucket (or a replayed micro-batch)
+        # replaces its own partitions
+        def write(name: str, df: DataFrame) -> None:
             sink_counts[name] = write_observed(
-                events, output_dir, name, partition_cols=partition_cols,
+                df, output_dir, name, partition_cols=partition_cols,
                 mode="overwrite_partitions",
             )
 
-        writes = [
-            (counted, "parsed_turns", access),
-            (counted, "error_turns", errors),
-            (counted, "rejects", rejects),
-            (observed, ROW_SINKS_BY_SEVERITY["high"],
-             sec.attack_events(enriched, cfg)),
-            (observed, ROW_SINKS_BY_SEVERITY["medium"],
-             sec.scan_events(enriched, cfg)),
-        ]
         # Every sink reads only the persisted frame, so the writes are
         # independent Spark actions — submit them concurrently and let the
         # scheduler interleave; each sets a distinct sink_counts key.
         with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for f in [pool.submit(*w) for w in writes]:
+            for f in [pool.submit(write, *w) for w in writes.items()]:
                 f.result()  # re-raises the first failure
     finally:
         # always drop the cache blocks — a failed concurrent sink write
         # must not leak MEMORY_AND_DISK blocks for the session lifetime
         enriched.unpersist()
-    return counts.get("parsed_turns", {})
+    return parsed_by_bucket
 
 
 def write_observed(
@@ -328,6 +306,15 @@ def _aggregate_stage(
             )
         )
 
+        # IP threat over all five detectors, as the reference scores it:
+        # the row detectors rerun over the persisted parsed rows, so the
+        # stage reads no sink but parsed_turns and honours this run's cfg
+        all_events = (
+            agg_events.drop("bucket")
+            .unionByName(sec.attack_events(parsed, cfg))
+            .unionByName(sec.scan_events(parsed, cfg))
+        )
+
         # Independent full-overwrite sinks off the two persisted frames;
         # concurrent submission lets the scheduler overlap them (cache
         # blocks are computed once under Spark's block-level locks,
@@ -341,31 +328,15 @@ def _aggregate_stage(
         writes = [
             (name, agg_events.where(F.col("severity") == severity))
             for severity, name in AGG_SINKS_BY_SEVERITY.items()
-        ] + [("performance_metrics", metrics), ("anomalies", anomalies)]
+        ] + [
+            ("performance_metrics", metrics),
+            ("anomalies", anomalies),
+            ("ip_threat_scores", sec.ip_threat_scores(all_events, cfg)),
+        ]
         try:
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
                 for f in [pool.submit(_observed_to, *w) for w in writes]:
                     f.result()
-
-            # threat scores over the union of all routed events. A sink this
-            # call's route wrote rows to is read without a probe: a probe
-            # that fails transiently must not drop its events. Only a sink
-            # the route did not fill here (analyze-only, resumed buckets)
-            # is probed, as it may have no schema-bearing files.
-            row_events = None
-            for name in ROW_SINKS_BY_SEVERITY.values():
-                if result.sink_counts.get(name) or catalog.table_exists(
-                    spark, output_dir, name
-                ):
-                    t_df = catalog.read_table(spark, output_dir, name)
-                    row_events = t_df if row_events is None else row_events.unionByName(t_df)
-            all_events = agg_events.drop("bucket")
-            if row_events is not None:
-                all_events = all_events.unionByName(row_events.drop("bucket"))
-            scores = sec.ip_threat_scores(all_events, cfg)
-            written["ip_threat_scores"] = write_observed(
-                scores, output_dir, "ip_threat_scores"
-            )
             result.sink_counts.update(written)
 
             high_events = all_events.where(F.col("severity") == "high")

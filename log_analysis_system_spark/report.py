@@ -15,20 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .config import STATUS_DESCRIPTIONS
 from .operators import performance as perf
 from .sources import catalog
 
 SAMPLE_ROWS = 5
 TABLE_ROWS = 10
 
-# reference dashboard.py:211-222
-STATUS_DESCRIPTIONS = {
-    200: "OK", 201: "Created", 204: "No Content", 301: "Moved Permanently",
-    302: "Found", 304: "Not Modified", 400: "Bad Request",
-    401: "Unauthorized", 403: "Forbidden", 404: "Not Found",
-    405: "Method Not Allowed", 500: "Internal Server Error",
-    502: "Bad Gateway", 503: "Service Unavailable", 504: "Gateway Timeout",
-}
+# the severity sinks the pipeline writes (no detector emits low severity)
+SECURITY_SINKS = (
+    "security_events_high", "security_events_agg_high",
+    "security_events_medium", "security_events_agg_medium",
+)
 
 
 def _section(title: str) -> str:
@@ -122,12 +120,7 @@ def render_report(spark: SparkSession, output_dir: str) -> str:
             out.append(f"\nOverall Error Rate: {err[0]['error_rate']:.2%}")
 
     out.append(_section("SECURITY ANALYSIS"))
-    sev_frames = [
-        df
-        for sev in ("high", "medium", "low")
-        for df in (read(f"security_events_{sev}"), read(f"security_events_agg_{sev}"))
-        if df is not None
-    ]
+    sev_frames = [df for df in map(read, SECURITY_SINKS) if df is not None]
     if sev_frames:
         events = sev_frames[0]
         for df in sev_frames[1:]:

@@ -3,6 +3,7 @@ idempotence (SURVEY §5 rebuild test plan layer 3)."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
@@ -10,6 +11,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from log_analysis_system_spark import state as st
+from log_analysis_system_spark.config import DEFAULT_CONFIG
 from log_analysis_system_spark.datagen.transcripts import synth_transcripts
 from log_analysis_system_spark.functions.parse import parse_transcripts
 from log_analysis_system_spark.operators import security as sec
@@ -45,6 +47,10 @@ def test_pipeline_fanout_counts(spark, transcripts, tmp_path_factory):
     assert _read(spark, out, "parsed_turns").count() == n_access
     assert _read(spark, out, "error_turns").count() == n_error
     assert _read(spark, out, "rejects").count() == n_reject
+    # every route sink is counted inside its own write
+    for name in ("parsed_turns", "error_turns", "rejects",
+                 "security_events_high", "security_events_medium"):
+        assert res.sink_counts[name] == _read(spark, out, name).count(), name
 
     # per-severity fan-out equals the detectors run directly
     events = sec.all_security_events(parsed)
@@ -132,9 +138,9 @@ def test_threat_scores_ignore_failed_row_sink_probe(
     spark, transcripts, tmp_path_factory, monkeypatch
 ):
     """A failed ``table_exists`` probe of the routed row-event sinks must
-    not drop their attack/scan events from ``ip_threat_scores``: the route
-    of the same call counted rows there, so the read-back needs no
-    probe."""
+    not drop their attack/scan events from ``ip_threat_scores``: the
+    aggregate reruns the row detectors over parsed_turns and never reads
+    those sinks back."""
     row_sinks = ("security_events_high", "security_events_medium")
     plain = str(tmp_path_factory.mktemp("threat_plain"))
     res = run_pipeline(spark, transcripts, plain, "threat-1", n_buckets=8,
@@ -156,6 +162,71 @@ def test_threat_scores_ignore_failed_row_sink_probe(
     want = scores(plain)
     assert sum(r.n_attack + r.n_scan for r in want) > 0
     assert scores(probed) == want
+
+
+def _sorted_rows(got, want):
+    return sorted(got.select(want.columns).collect()), sorted(want.collect())
+
+
+def test_resumed_aggregate_reads_only_parsed_turns(
+    spark, transcripts, tmp_path_factory, monkeypatch
+):
+    """A resumed run reads back parsed_turns and none of the route's other
+    sinks: threat scores come from all five detectors run over the parsed
+    rows, as the reference scores them."""
+    out = str(tmp_path_factory.mktemp("agg_reads"))
+    run_pipeline(spark, transcripts, out, "reads-1", n_buckets=8,
+                 fail_after_route=True)
+    names = []
+    for fn in ("read_table", "table_exists"):
+        def recorded(spark, base, name, *a, _real=getattr(catalog, fn), **kw):
+            names.append(name)
+            return _real(spark, base, name, *a, **kw)
+
+        monkeypatch.setattr(catalog, fn, recorded)
+    res = run_pipeline(spark, transcripts, out, "reads-1", n_buckets=8)
+    monkeypatch.undo()
+    assert res.buckets_processed == [] and res.aggregate_ran
+    assert "parsed_turns" in names
+    assert set(names) <= {"parsed_turns", "state_metrics", "alert_state"}
+
+    want = sec.ip_threat_scores(
+        sec.all_security_events(parse_transcripts(transcripts))
+    )
+    got = _read(spark, out, "ip_threat_scores")
+    assert want.agg(F.sum(F.col("n_attack") + F.col("n_scan"))).first()[0] > 0
+    got_rows, want_rows = _sorted_rows(got, want)
+    assert got_rows == want_rows
+
+
+def test_analyze_only_scores_row_detectors_under_its_cfg(
+    spark, transcripts, tmp_path_factory
+):
+    """``analyze_only`` reruns every detector over parsed_turns under its
+    own cfg (the reference's ``--analyze-only``): an attack pattern added
+    after the route shows up in ``n_attack``."""
+    out = str(tmp_path_factory.mktemp("analyze_cfg"))
+    run_pipeline(spark, transcripts, out, "cfg-1", n_buckets=8, resume=False)
+
+    def n_attack():
+        return _read(spark, out, "ip_threat_scores").agg(
+            F.sum("n_attack")
+        ).first()[0]
+
+    before = n_attack()
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        attack_patterns=DEFAULT_CONFIG.attack_patterns + ("/checkout",),
+    )
+    run_pipeline(spark, transcripts, out, "cfg-2", n_buckets=8,
+                 analyze_only=True, cfg=cfg)
+    assert n_attack() > before
+
+    want = sec.ip_threat_scores(
+        sec.all_security_events(parse_transcripts(transcripts), cfg=cfg), cfg
+    )
+    got_rows, want_rows = _sorted_rows(_read(spark, out, "ip_threat_scores"), want)
+    assert got_rows == want_rows
 
 
 def test_pipeline_resume_idempotent(spark, transcripts, tmp_path_factory):
