@@ -25,7 +25,7 @@ from log_analysis_system_spark.functions.parse import parse_transcripts
 from log_analysis_system_spark.operators import performance as perf
 from log_analysis_system_spark.operators import security as sec
 
-from .conftest import access_line, make_transcripts
+from .conftest import REPO, access_line, make_transcripts
 
 
 def _write(tmp_path, name, text):
@@ -162,14 +162,14 @@ def test_cli_end_to_end(tmp_path):
         "--input", "/root/testdata/sf0.001", "--output", out_dir,
         "--run-id", "cli-smoke", "--buckets", "4", "--master", "local[4]",
     ]
-    r = subprocess.run(base, capture_output=True, text=True, cwd="/root/repo",
+    r = subprocess.run(base, capture_output=True, text=True, cwd=REPO,
                        env=env, timeout=600)
     assert r.returncode == 0, r.stderr[-4000:]
     summary = json.loads(r.stdout.strip().splitlines()[-1])
     assert summary["aggregate_ran"] and summary["sink_counts"]["parsed_turns"] > 0
 
     r2 = subprocess.run(base + ["--analyze-only"], capture_output=True,
-                        text=True, cwd="/root/repo", env=env, timeout=600)
+                        text=True, cwd=REPO, env=env, timeout=600)
     assert r2.returncode == 0, r2.stderr[-4000:]
     summary2 = json.loads(r2.stdout.strip().splitlines()[-1])
     assert summary2["aggregate_ran"] and summary2["buckets_processed"] == 0

@@ -6,10 +6,6 @@ detection rules (mirrors tests/test_jsonl.py for the fourth front door).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from log_analysis_system_spark.queries_log import load_transcripts

@@ -4,10 +4,6 @@ interop (the read side feeds run_pipeline unchanged)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from log_analysis_system_spark.queries_log import load_transcripts

@@ -10,14 +10,11 @@ from __future__ import annotations
 
 import email
 import os
-import sys
 
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from log_analysis_system_spark.notifier import (  # noqa: E402
+from log_analysis_system_spark.notifier import (
     EmailNotifier,
     SmtpTransport,
     deliver_throttled_alerts,

@@ -10,12 +10,8 @@ Guards the rotation policy the correctness gate depends on:
   registered, oracle-paired ``*_check`` invariant wrapper.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
-from tools.coverage_ledger import MAX_STALE_ROUNDS, build_ledger  # noqa: E402
+import __spark_entry__ as entry
+from tools.coverage_ledger import MAX_STALE_ROUNDS, build_ledger
 
 
 def test_window_is_first_50_unique_registered():

@@ -15,15 +15,12 @@ from __future__ import annotations
 
 import math
 import re
-import sys
 from datetime import datetime
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from log_analysis_system_spark.queries_tpch import (  # noqa: E402
+from log_analysis_system_spark.queries_tpch import (
     EXTRA_ORACLES,
     EXTRA_QUERIES,
 )

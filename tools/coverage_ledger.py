@@ -36,15 +36,17 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 MAX_STALE_ROUNDS = 3
 
 
-def load_history(repo: str = "/root/repo") -> dict[int, dict]:
+def load_history(repo: str = REPO) -> dict[int, dict]:
     hist = {}
     for path in sorted(glob.glob(f"{repo}/CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)

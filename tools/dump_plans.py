@@ -7,10 +7,12 @@ Usage: python tools/dump_plans.py [sf_dir] > PLANS.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from log_analysis_system_spark.session import get_spark  # noqa: E402
 
