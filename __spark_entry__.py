@@ -7,33 +7,9 @@ reference's ``database.py:322-363`` / ``performance.py:60-74`` semantics).
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
 SURVEY.md §2 with a DuckDB oracle over the shared parquet views.
 
-Registry ordering is deliberate: the driver's correctness gate checks the
-FIRST 50 entries in iteration order. Round-5 rotation (VERDICT.md r4
-next-round items #1-#2): ``_DRIVER_WINDOW`` front-loads
-
-(a) the 38 staleness-bound must-includes — every oracle-paired query whose
-most recent driver row is round 2. ``tools/coverage_ledger.py --next-plan``
-emitted exactly this list; left outside the r5 window their staleness
-would reach 4 rounds at the post-r5 ledger read, past the 3-round bound
-that 153 registered queries over a 50-slot window arithmetically allow.
-
-(b) the 12 TPC-H completion shapes promoted into the registry this round
-(``queries_tpch.PROMOTED`` — Q2, Q7-Q11, Q15-Q17, Q19-Q21), taking their
-first driver rows. They fill the remaining 12 slots exactly; the 13th
-completion shape, ``tpch_shipping_delays`` (Q12), stays pytest-gated in
-``queries_tpch.EXTRA_QUERIES`` (rationale at the promotion block there:
-the never-covered rule forbids registering without a slot, and Q12's
-conditional-aggregation family already has driver-green representatives).
-
-Rotated OUT relative to round 4: the full r4 window (all green in
-CORRECTNESS_r04.json, staleness 1) including — per VERDICT r4
-"What's wrong" #1 — the two permanently-``no_oracle`` sketch queries
-``approx_distinct_daily`` / ``value_percentiles_approx``, which can never
-produce a green hash row; their value evidence is the r3-green
-oracle-paired check wrappers ``approx_distinct_check`` /
-``percentiles_approx_check`` (exact+sketch compared in one frame).
-Every rotated-out query stays registered and is re-verified by the local
-replica gate (``tools/check_correctness.py``) + pytest each round.
+The first 50 entries of ``queries()`` are ``_DRIVER_WINDOW``, in its order:
+the driver's correctness gate checks only those. Every other query stays
+registered and is checked by ``tools/check_correctness.py`` and pytest.
 """
 
 from __future__ import annotations
@@ -47,11 +23,6 @@ from log_analysis_system_spark.queries_log import QUERIES as _LOG_QUERIES
 
 # First 50 = the driver's correctness window (see module docstring).
 _DRIVER_WINDOW = [
-    # (a) the 38 staleness-bound must-includes: every oracle-paired query
-    # whose most recent driver row is r2 (tools/coverage_ledger.py
-    # --next-plan emitted exactly this list) — outside the r5 window their
-    # staleness would reach 4 rounds at the post-r5 ledger read, past the
-    # 3-round bound. Grouped by family.
     #   transcript front door + parse
     "transcripts_roundtrip",
     "parsed_turns_pandas",
@@ -96,14 +67,7 @@ _DRIVER_WINDOW = [
     "ann_topk_cosine",
     "ann_topk_cosine_np",
     "ann_ivf_fullprobe",
-    # (b) the 12 TPC-H completion shapes promoted into the registry this
-    # round (queries_tpch.PROMOTED; VERDICT r4 item #1) — first driver
-    # rows. They fill the 12 free slots exactly; tpch_shipping_delays
-    # (Q12) stays pytest-gated in EXTRA_QUERIES (rationale at the
-    # promotion block in queries_tpch.py). The two permanently-no_oracle
-    # sketch queries (approx_distinct_daily, value_percentiles_approx)
-    # rotate OUT per VERDICT item "What's wrong" #1 — their value
-    # evidence remains the r3-green oracle-paired check wrappers.
+    #   TPC-H completion shapes
     "tpch_volume_shipping",
     "tpch_market_share",
     "tpch_product_profit",
@@ -117,7 +81,6 @@ _DRIVER_WINDOW = [
     "tpch_dominant_suppliers",
     "tpch_waiting_suppliers",
 ]
-
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -141,8 +104,8 @@ def _reorder(d: dict, require_all: bool = True) -> dict:
     # hard-fail on a missing window entry: a silent ImportError in a query
     # module would otherwise SHIFT the driver's first-50 window and change
     # which queries get correctness rows. oracle_sql() passes
-    # require_all=False — two in-window sketch queries (approx_distinct_daily,
-    # value_percentiles_approx) have no oracle BY DESIGN and must not trip it.
+    # require_all=False: an oracle-less sketch query may sit in the window
+    # (tests/test_registry.py names the two allowed).
     missing = [n for n in _DRIVER_WINDOW if n not in d]
     if missing and require_all:
         raise RuntimeError(f"driver-window queries missing from registry: {missing}")

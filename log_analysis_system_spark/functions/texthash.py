@@ -156,18 +156,10 @@ def simhash32_from_hashes(hs: Column, n: Column) -> Column:
     return total.cast("bigint")
 
 
-def simhash32(feature_col: Column) -> Column:
-    """32-bit SimHash over a (distinct) string-feature array — convenience
-    form; prefer hashing in a separate projection via
-    :func:`feature_hashes32` + :func:`simhash32_from_hashes` (see there)."""
-    return simhash32_from_hashes(
-        feature_hashes32(feature_col), F.size(feature_col)
-    )
-
-
 def duck_simhash32_sql(hashes_expr: str, size_expr: str) -> str:
-    """DuckDB expression mirroring :func:`simhash32` given a list-of-hashes
-    SQL expression (already reduced mod 2^32) and its length expression."""
+    """DuckDB expression mirroring :func:`simhash32_from_hashes` given a
+    list-of-hashes SQL expression (already reduced mod 2^32) and its length
+    expression."""
     terms = []
     for j in range(32):
         ones = (

@@ -152,9 +152,6 @@ def _route_stage(
             bucketed.repartitionById(n_tasks, "bucket"), output_dir,
             result.sink_counts, n_buckets, cfg,
         )
-        # no row detector emits low severity, so no route writes
-        # security_events_low; its count is 0
-        result.sink_counts["security_events_low"] = 0
 
     st.record_stage(
         spark, output_dir, run_id, "route", t.wall_ms,

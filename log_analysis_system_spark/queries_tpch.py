@@ -656,15 +656,7 @@ ORDER BY custdist DESC, c_count DESC
 """
 
 
-# =========================================================================
-# Round-4 session-4 completion: the 13 remaining TPC-H query shapes.
-#
-# NOT merged into QUERIES/ORACLES: the driver's 50-slot correctness window
-# is saturated (every slot is a first-driver-row this round, and
-# test_registry forbids registering a query that would strand a
-# never-checked one), so these ship as EXTRA_* with their own cross-engine
-# pytest gate (tests/test_tpch_extra.py, exact value compare vs DuckDB at
-# two scale factors) and join the round-5 rotation pool.
+# The 13 remaining TPC-H shapes (Q2, Q7-Q12, Q15-Q17, Q19-Q21).
 #
 # Schema adaptations (this repo's TPC-H-ish testdata has no partsupp
 # table and no shipmode/commitdate/receiptdate/container/phone columns;
@@ -673,13 +665,9 @@ ORDER BY custdist DESC, c_count DESC
 #   - supplier<->part relationships ride the lineitem bridge (Q2/Q11/
 #     Q16/Q20),
 #   - "late" is l_shipdate > o_orderdate + N days (Q12/Q21, same
-#     adaptation the registered Q4 shape uses),
+#     adaptation the Q4 shape uses),
 #   - cost proxies derive from observed lineitem unit prices or
 #     p_retailprice (Q2/Q9).
-# =========================================================================
-
-EXTRA_QUERIES: dict = {}
-EXTRA_ORACLES: dict = {}
 
 Q7_NATION_A = "NATION_1"
 Q7_NATION_B = "NATION_2"
@@ -760,8 +748,8 @@ def q_tpch_volume_shipping(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_volume_shipping"] = q_tpch_volume_shipping
-EXTRA_ORACLES["tpch_volume_shipping"] = f"""
+QUERIES["tpch_volume_shipping"] = q_tpch_volume_shipping
+ORACLES["tpch_volume_shipping"] = f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(year(l_shipdate) AS INT) AS l_year,
        round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -870,8 +858,8 @@ def q_tpch_market_share(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_market_share"] = q_tpch_market_share
-EXTRA_ORACLES["tpch_market_share"] = f"""
+QUERIES["tpch_market_share"] = q_tpch_market_share
+ORACLES["tpch_market_share"] = f"""
 SELECT CAST(year(o_orderdate) AS INT) AS o_year,
        round(
          CAST(sum(CASE WHEN n1.n_name = '{Q8_NATION}'
@@ -964,8 +952,8 @@ def q_tpch_product_profit(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_product_profit"] = q_tpch_product_profit
-EXTRA_ORACLES["tpch_product_profit"] = f"""
+QUERIES["tpch_product_profit"] = q_tpch_product_profit
+ORACLES["tpch_product_profit"] = f"""
 SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
        round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
                            - {Q9_COST_FACTOR} * p_retailprice * l_quantity
@@ -1043,8 +1031,8 @@ def q_tpch_returned_items(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_returned_items"] = q_tpch_returned_items
-EXTRA_ORACLES["tpch_returned_items"] = f"""
+QUERIES["tpch_returned_items"] = q_tpch_returned_items
+ORACLES["tpch_returned_items"] = f"""
 WITH agg AS (
   SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal, n_name,
          round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -1126,8 +1114,8 @@ def q_tpch_important_parts(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_important_parts"] = q_tpch_important_parts
-EXTRA_ORACLES["tpch_important_parts"] = f"""
+QUERIES["tpch_important_parts"] = q_tpch_important_parts
+ORACLES["tpch_important_parts"] = f"""
 WITH per_part AS (
   SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(28,10))) AS val_dec
   FROM lineitem
@@ -1207,8 +1195,8 @@ def q_tpch_shipping_delays(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_shipping_delays"] = q_tpch_shipping_delays
-EXTRA_ORACLES["tpch_shipping_delays"] = f"""
+QUERIES["tpch_shipping_delays"] = q_tpch_shipping_delays
+ORACLES["tpch_shipping_delays"] = f"""
 SELECT CASE WHEN l_shipdate >= o_orderdate + INTERVAL {Q12_VERY_SLOW_DAYS} DAYS
             THEN '60+ days'
             ELSE '30-60 days' END AS delay_bucket,
@@ -1282,8 +1270,8 @@ def q_tpch_top_supplier(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_top_supplier"] = q_tpch_top_supplier
-EXTRA_ORACLES["tpch_top_supplier"] = f"""
+QUERIES["tpch_top_supplier"] = q_tpch_top_supplier
+ORACLES["tpch_top_supplier"] = f"""
 WITH rev AS (
   SELECT l_suppkey,
          sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -1349,8 +1337,8 @@ def q_tpch_parts_suppliers(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_parts_suppliers"] = q_tpch_parts_suppliers
-EXTRA_ORACLES["tpch_parts_suppliers"] = f"""
+QUERIES["tpch_parts_suppliers"] = q_tpch_parts_suppliers
+ORACLES["tpch_parts_suppliers"] = f"""
 SELECT p_brand, p_type, p_size,
        count(DISTINCT l_suppkey) AS supplier_cnt
 FROM lineitem
@@ -1417,8 +1405,8 @@ def q_tpch_small_qty_revenue(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_small_qty_revenue"] = q_tpch_small_qty_revenue
-EXTRA_ORACLES["tpch_small_qty_revenue"] = f"""
+QUERIES["tpch_small_qty_revenue"] = q_tpch_small_qty_revenue
+ORACLES["tpch_small_qty_revenue"] = f"""
 WITH per_part AS (
   SELECT l_partkey,
          CAST(sum(CAST(l_quantity AS DECIMAL(28,10))) AS DOUBLE) / count(*)
@@ -1490,13 +1478,13 @@ def q_tpch_discounted_revenue(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_discounted_revenue"] = q_tpch_discounted_revenue
+QUERIES["tpch_discounted_revenue"] = q_tpch_discounted_revenue
 _Q19_OR = " OR ".join(
     f"(p_brand = '{b}' AND p_size BETWEEN {slo} AND {shi}"
     f" AND l_quantity BETWEEN {qlo} AND {qhi})"
     for b, slo, shi, qlo, qhi in Q19_BRANCHES
 )
-EXTRA_ORACLES["tpch_discounted_revenue"] = f"""
+ORACLES["tpch_discounted_revenue"] = f"""
 SELECT round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
                            AS DECIMAL(28,10))) AS DOUBLE), 2) AS revenue,
        count(*) AS n_lines
@@ -1588,8 +1576,8 @@ def q_tpch_min_cost_supplier(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_min_cost_supplier"] = q_tpch_min_cost_supplier
-EXTRA_ORACLES["tpch_min_cost_supplier"] = f"""
+QUERIES["tpch_min_cost_supplier"] = q_tpch_min_cost_supplier
+ORACLES["tpch_min_cost_supplier"] = f"""
 WITH offers AS (
   SELECT l_partkey, l_suppkey, s_name, s_acctbal, n_name,
          min(round(l_extendedprice / l_quantity, 6)) AS supply_cost
@@ -1694,8 +1682,8 @@ def q_tpch_dominant_suppliers(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_dominant_suppliers"] = q_tpch_dominant_suppliers
-EXTRA_ORACLES["tpch_dominant_suppliers"] = f"""
+QUERIES["tpch_dominant_suppliers"] = q_tpch_dominant_suppliers
+ORACLES["tpch_dominant_suppliers"] = f"""
 WITH pair_qty AS (
   SELECT l_partkey, l_suppkey,
          sum(CAST(l_quantity AS DECIMAL(28,10))) AS qty_dec
@@ -1807,8 +1795,8 @@ def q_tpch_waiting_suppliers(spark, sf_dir):
     )
 
 
-EXTRA_QUERIES["tpch_waiting_suppliers"] = q_tpch_waiting_suppliers
-EXTRA_ORACLES["tpch_waiting_suppliers"] = f"""
+QUERIES["tpch_waiting_suppliers"] = q_tpch_waiting_suppliers
+ORACLES["tpch_waiting_suppliers"] = f"""
 SELECT s_suppkey, s_name, count(*) AS numwait
 FROM supplier, lineitem l1, orders, nation, region
 WHERE s_suppkey = l1.l_suppkey
@@ -1828,22 +1816,3 @@ WHERE s_suppkey = l1.l_suppkey
 GROUP BY 1, 2
 ORDER BY numwait DESC, s_name, s_suppkey
 """
-
-
-# --- round-5 driver registration (VERDICT r4 next-round item #1) ---------
-# All 22 TPC-H shapes exist; 12 of the 13 completion shapes promote into
-# the driver registry here so they can occupy round 5's free window slots
-# (the 50-slot window holds 38 staleness-bound must-includes from
-# ``tools/coverage_ledger.py --next-plan``, leaving exactly 12 free).
-# ``tpch_shipping_delays`` (Q12) stays pytest-gated in EXTRA_QUERIES: the
-# never-covered rule in tests/test_registry.py forbids registering a query
-# without a window slot, and Q12's CASE-WHEN conditional-aggregation
-# family already has driver-green representatives (tpch_promo_revenue Q14,
-# r4; tpch_market_share Q8, entering the r5 window). The EXTRA_* dicts
-# keep ALL 13 entries so tests/test_tpch_extra.py's value-exact DuckDB
-# gate keeps covering Q12 (and double-covers the promoted 12).
-PROMOTED = [n for n in EXTRA_QUERIES if n != "tpch_shipping_delays"]
-for _n in PROMOTED:
-    QUERIES[_n] = EXTRA_QUERIES[_n]
-    ORACLES[_n] = EXTRA_ORACLES[_n]
-del _n

@@ -90,61 +90,6 @@ def write_bucketed_table(
     w.mode("overwrite").format("parquet").saveAsTable(name)
 
 
-def compact_table(
-    spark: SparkSession,
-    base_dir: str,
-    name: str,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a (hive-partitioned parquet) table so
-    each partition holds ONE file instead of the per-append fragments the
-    fan-out sinks accumulate (every pipeline run appends >= 1 file per
-    bucket per sink; after N runs a 10^12-row table is N-way fragmented and
-    scan planning + open() overhead dominates small queries).
-
-    Shape: one shuffle keyed on the partition columns (each partition's
-    rows converge on one task -> one output file). STAGED SWAP, not
-    read-and-overwrite: the compacted copy streams executor-to-executor
-    into a staging directory (never materialized in memory — a 10^12-row
-    table compacts with bounded executor footprint), then two filesystem
-    renames swap it in. This is the same snapshot-style pattern Iceberg's
-    `rewrite_data_files` procedure uses (write new files, commit a
-    pointer flip); on the iceberg backend use that procedure directly.
-    Readers holding the old directory open keep a consistent view until
-    the rename; the swap window is two metadata ops, not a data rewrite.
-    Returns the row count rewritten (an end-to-end conservation check
-    for callers).
-    """
-    if table_format() == "iceberg":
-        raise NotImplementedError(
-            "use Iceberg's rewrite_data_files procedure on the iceberg backend"
-        )
-    cols = partition_cols or ["bucket"]
-    from pyspark.sql import functions as F
-
-    live = f"{base_dir}/{name}"
-    staging = f"{base_dir}/{name}__compacting"
-    retired = f"{base_dir}/{name}__retired"
-    df = spark.read.parquet(live)
-    compacted = df.repartition(*[F.col(c) for c in cols])
-    compacted.write.partitionBy(*cols).mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(live).getFileSystem(conf)
-    fs.delete(Path(retired), True)
-    if not fs.rename(Path(live), Path(retired)):
-        raise IOError(f"compact_table: could not retire {live}")
-    if not fs.rename(Path(staging), Path(live)):
-        # roll back: put the live table back before failing
-        fs.rename(Path(retired), Path(live))
-        raise IOError(f"compact_table: could not swap in {staging}")
-    fs.delete(Path(retired), True)
-    return n
-
-
 def read_table(
     spark: SparkSession,
     base_dir: str,

@@ -23,8 +23,8 @@ compare the driver gate runs:
   rank-domain ``percentiles_approx_check``).
 - the seven TPC-H tables — zero-lineitem orders, orderless customers,
   leap-aware ship-lag boundaries, exactly-at-threshold quantities,
-  min-cost/revenue/rank ties, year-boundary dates; covers all 21
-  registered TPC-H queries plus the pytest-gated Q12, with a
+  min-cost/revenue/rank ties, year-boundary dates; covers all 22
+  registered TPC-H queries, with a
   non-vacuity test pinning exact per-edge row sets so a silently-dead
   edge fails the suite.
 
@@ -336,15 +336,11 @@ def test_fixture_selects_a_real_slice():
     assert len(names) >= 35, names
 
 
-def _cross_engine_failures(
-    spark, fixture_dir, tables, names, queries=None, oracles=None
-):
+def _cross_engine_failures(spark, fixture_dir, tables, names):
     """Run each named query on Spark and its oracle on DuckDB over the
-    fixture dir; return mismatch descriptions. ``queries``/``oracles``
-    default to the registered contract but accept other dicts (the
-    pytest-gated EXTRA entries ride the same comparison machinery)."""
-    queries = entrymod.queries() if queries is None else queries
-    oracles = entrymod.oracle_sql() if oracles is None else oracles
+    fixture dir; return mismatch descriptions."""
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     con = duckdb.connect()
     for t in tables:
         con.execute(
@@ -742,30 +738,12 @@ def _tpch_only_queries():
 
 def test_tpch_fixture_selects_a_real_slice():
     names = _tpch_only_queries()
-    assert len(names) >= 20, names  # the 21 registered TPC-H shapes
+    assert len(names) >= 22, names  # the 22 registered TPC-H shapes
 
 
 def test_hostile_tpch_cross_engine(spark, hostile_tpch_dir):
     failures = _cross_engine_failures(
         spark, hostile_tpch_dir, _TPCH_TABLES, _tpch_only_queries()
-    )
-    assert not failures, "\n".join(failures)
-
-
-def test_hostile_tpch_covers_q12_extra(spark, hostile_tpch_dir):
-    """tpch_shipping_delays (Q12) is pytest-gated rather than
-    driver-registered (window arithmetic — see queries_tpch.PROMOTED);
-    give it the same hostile-fixture evidence as the registered 21
-    through the same comparison helper. The Q4/Q21 lag edges exercise
-    its slow/very-slow ship-lag buckets."""
-    from log_analysis_system_spark.queries_tpch import (
-        EXTRA_ORACLES,
-        EXTRA_QUERIES,
-    )
-
-    failures = _cross_engine_failures(
-        spark, hostile_tpch_dir, _TPCH_TABLES, ["tpch_shipping_delays"],
-        queries=EXTRA_QUERIES, oracles=EXTRA_ORACLES,
     )
     assert not failures, "\n".join(failures)
 

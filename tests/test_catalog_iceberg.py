@@ -84,12 +84,6 @@ def test_write_bucketed_table_partitioned_by_bucket_transform(spy, df):
     assert (t2, op2) == ("graft.facts", "createOrReplace")
 
 
-def test_compact_table_directs_to_rewrite_procedure(monkeypatch, spark):
-    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "iceberg")
-    with pytest.raises(NotImplementedError, match="rewrite_data_files"):
-        catalog.compact_table(spark, "/unused", "parsed_turns")
-
-
 def test_read_table_iceberg_reads_catalog_table(monkeypatch, spark):
     monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "iceberg")
     seen = []

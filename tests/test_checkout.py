@@ -43,3 +43,23 @@ def test_scaling_worker_runs_outside_the_checkout(spark, tmp_path):
     assert line["cores"] == cores and line["pinned_cpus"] == cores
     assert line["turns"] == 2000 and line["wall_s"] > 0
     assert not (tmp_path / "out.scratch").exists()
+
+
+def test_scaling_datagen_leaves_no_jvm_in_the_bench(tmp_path):
+    """bench_scaling writes its input from a child process, so the bench
+    process starts no Spark gateway (JVM) that would run beside the pinned
+    trials."""
+    out = str(tmp_path / "transcripts")
+    code = (
+        "import json, sys, pyspark, pyarrow.parquet as pq\n"
+        f"sys.path.insert(0, {str(REPO / 'tools')!r})\n"
+        "from bench_scaling import gen_input\n"
+        f"gen_input({out!r}, 2000)\n"
+        "print(json.dumps({'gateway': pyspark.SparkContext._gateway is not None,"
+        f" 'rows': pq.read_table({out!r}).num_rows}}))\n"
+    )
+    res = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, cwd=tmp_path, timeout=600)
+    assert res.returncode == 0, res.stderr[-4000:]
+    line = json.loads(res.stdout.strip().splitlines()[-1])
+    assert line == {"gateway": False, "rows": 2000}

@@ -99,7 +99,7 @@ def test_pipeline_fanout_counts(spark, transcripts, tmp_path_factory):
         assert files, sink
         assert all(len(fs) == 1 for fs in files.values()), (sink, files)
     assert not (out / "security_events_low").exists()
-    assert res.sink_counts["security_events_low"] == 0
+    assert "security_events_low" not in res.sink_counts
     # no aggregate detector emits low severity either
     assert not (out / "security_events_agg_low").exists()
 
@@ -393,43 +393,6 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bkt_docs")
         spark.sql("DROP TABLE IF EXISTS bkt_meta")
-
-
-def test_compact_table_one_file_per_partition(spark, tmp_path_factory):
-    """Two appends fragment each bucket into >= 2 files; compaction must
-    leave exactly one file per bucket with the row multiset unchanged."""
-    import glob
-
-    base = str(tmp_path_factory.mktemp("compact"))
-    df = spark.range(0, 2000).selectExpr(
-        "id", "CAST(id % 4 AS INT) AS bucket", "concat('v', id) AS payload"
-    )
-    catalog.write_table(df, base, "t", partition_cols=["bucket"], mode="append")
-    catalog.write_table(df, base, "t", partition_cols=["bucket"], mode="append")
-
-    def files_per_bucket():
-        return {
-            b: len(glob.glob(f"{base}/t/bucket={b}/*.parquet")) for b in range(4)
-        }
-
-    assert all(n >= 2 for n in files_per_bucket().values())
-    before = spark.read.parquet(f"{base}/t")
-    before_counts = {r["id"]: r["count"] for r in before.groupBy("id").count().collect()}
-
-    n = catalog.compact_table(spark, base, "t", partition_cols=["bucket"])
-    assert n == 4000
-    assert all(n == 1 for n in files_per_bucket().values()), files_per_bucket()
-    after = spark.read.parquet(f"{base}/t")
-    after_counts = {r["id"]: r["count"] for r in after.groupBy("id").count().collect()}
-    assert after_counts == before_counts and after.count() == 4000
-    # staged swap leaves no staging/retired residue behind
-    import os
-
-    assert not os.path.exists(f"{base}/t__compacting")
-    assert not os.path.exists(f"{base}/t__retired")
-    # idempotent: a second compaction is a no-op rewrite, same multiset
-    assert catalog.compact_table(spark, base, "t", partition_cols=["bucket"]) == 4000
-    assert all(n == 1 for n in files_per_bucket().values())
 
 
 def test_pipeline_survives_all_rejects_input(spark, tmp_path_factory):

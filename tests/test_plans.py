@@ -46,9 +46,7 @@ BNLJ_ALLOWED = {
     "conv_skew_profile",      # 1-row (total, n_keys) frame broadcast onto top-n
     "tpch_no_recent_orders",  # 1-row avg-balance scalar broadcast (Q22 shape)
     "tpch_important_parts",   # 1-row nation-total scalar threshold (Q11 HAVING
-                              # sum > fraction * global sum) — registered in
-                              # round 5's promotion, same allowlisting it had
-                              # in tests/test_tpch_extra.py
+                              # sum > fraction * global sum)
     # (knn_label_agreement removed: its default neighbor source is now the
     # mapInPandas blocked matmul — no BNLJ in the plan — plus a size guard
     # that refuses the all-pairs default above 100k rows)

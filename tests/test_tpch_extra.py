@@ -1,14 +1,10 @@
 """The 13 TPC-H query shapes completing the 22-shape suite (Q2, Q7-Q12,
-Q15-Q17, Q19-Q21), defined in queries_tpch.EXTRA_*. Since round 5, 12 of
-them are ALSO promoted into the driver registry (queries_tpch.PROMOTED)
-and occupy driver-window slots; tpch_shipping_delays (Q12) remains
-pytest-only (rationale at the promotion block in queries_tpch.py). This
-gate stays parametrized over the full EXTRA set so all 13 keep
-cross-engine evidence regardless of window rotation: exact value compare
-vs DuckDB (the same compare the driver runs) at the scale factor where
-each query has a non-degenerate result, plus the same plan hygiene the
-registered set gets (no CartesianProduct; BroadcastNestedLoopJoin only
-for deliberate 1-row scalar-threshold broadcasts).
+Q15-Q17, Q19-Q21), registered in queries_tpch.QUERIES/ORACLES like the
+other nine. Each gets an exact value compare vs DuckDB (the same compare
+the driver runs) at the scale factor where it has a non-degenerate result,
+plus the plan hygiene the whole registry gets in tests/test_plans.py (no
+CartesianProduct; BroadcastNestedLoopJoin only for deliberate 1-row
+scalar-threshold broadcasts).
 """
 
 from __future__ import annotations
@@ -20,10 +16,23 @@ from datetime import datetime
 import duckdb
 import pytest
 
-from log_analysis_system_spark.queries_tpch import (
-    EXTRA_ORACLES,
-    EXTRA_QUERIES,
-)
+from log_analysis_system_spark.queries_tpch import ORACLES, QUERIES
+
+COMPLETION = [
+    "tpch_discounted_revenue",
+    "tpch_dominant_suppliers",
+    "tpch_important_parts",
+    "tpch_market_share",
+    "tpch_min_cost_supplier",
+    "tpch_parts_suppliers",
+    "tpch_product_profit",
+    "tpch_returned_items",
+    "tpch_shipping_delays",
+    "tpch_small_qty_revenue",
+    "tpch_top_supplier",
+    "tpch_volume_shipping",
+    "tpch_waiting_suppliers",
+]
 
 # sf0.001 unless the result degenerates there (important_parts' fractional
 # threshold keeps 0 of the ~10-supplier nation's parts at sf0.001)
@@ -34,7 +43,6 @@ SF_OVERRIDE = {
     # the two target nations trade 0 lines in sf0.001's sample window
     "tpch_volume_shipping": SF_MID,
 }
-MIN_ROWS = {name: 1 for name in EXTRA_QUERIES}
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem"]
@@ -71,37 +79,32 @@ def _oracle_rows(sf_dir: str, sql: str):
 
 
 def test_all_22_tpch_shapes_present():
-    from log_analysis_system_spark.queries_tpch import PROMOTED, QUERIES
-
-    # 22 distinct shapes total; the promoted 12 live in BOTH dicts (same
-    # callables), only Q12 is EXTRA-exclusive
-    assert len(set(QUERIES) | set(EXTRA_QUERIES)) == 22
-    assert set(QUERIES) & set(EXTRA_QUERIES) == set(PROMOTED)
-    assert set(EXTRA_QUERIES) - set(QUERIES) == {"tpch_shipping_delays"}
-    for n in PROMOTED:
-        assert QUERIES[n] is EXTRA_QUERIES[n]
+    names = [n for n in QUERIES if n.startswith("tpch_")]
+    assert len(names) == 22
+    assert set(COMPLETION) <= set(names)
+    assert all(n in ORACLES for n in names)
 
 
-@pytest.mark.parametrize("name", sorted(EXTRA_QUERIES))
+@pytest.mark.parametrize("name", COMPLETION)
 def test_extra_tpch_matches_oracle(spark, name):
     sf_dir = SF_OVERRIDE.get(name, SF_SMALL)
-    sdf = EXTRA_QUERIES[name](spark, sf_dir)
+    sdf = QUERIES[name](spark, sf_dir)
     scols = sorted(sdf.columns)
     srows = sorted(
         tuple(_norm(r[c]) for c in scols) for r in sdf.collect()
     )
-    dcols, drows = _oracle_rows(sf_dir, EXTRA_ORACLES[name])
+    dcols, drows = _oracle_rows(sf_dir, ORACLES[name])
     assert scols == dcols, f"{name}: columns {scols} != {dcols}"
     assert srows == drows, (
         f"{name}: {len(srows)} spark rows != {len(drows)} oracle rows "
         f"(first spark={srows[:2]}, oracle={drows[:2]})"
     )
-    assert len(srows) >= MIN_ROWS[name], f"{name}: degenerate empty result"
+    assert srows, f"{name}: degenerate empty result"
 
 
-@pytest.mark.parametrize("name", sorted(EXTRA_QUERIES))
+@pytest.mark.parametrize("name", COMPLETION)
 def test_extra_tpch_plan_hygiene(spark, name):
-    df = EXTRA_QUERIES[name](spark, SF_SMALL)
+    df = QUERIES[name](spark, SF_SMALL)
     plan = spark._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -136,9 +139,7 @@ def test_q21_rewrite_edges(spark, tmp_path):
     """numwait counts LINES not orders; a supplier late twice in one order
     counts twice; an order where TWO suppliers are late yields nobody; a
     single-supplier order yields nobody; non-'F' orders are ignored."""
-    from log_analysis_system_spark.queries_tpch import (
-        EXTRA_ORACLES, q_tpch_waiting_suppliers,
-    )
+    from log_analysis_system_spark.queries_tpch import q_tpch_waiting_suppliers
 
     region = ([(0, "ASIA")], "r_regionkey int, r_name string")
     nation = ([(0, "NATION_0", 0)],
@@ -196,7 +197,7 @@ def test_q21_rewrite_edges(spark, tmp_path):
                     f"read_parquet('{d}/{t}.parquet/*.parquet')")
     oracle = {
         tuple(r) for r in
-        con.execute(EXTRA_ORACLES["tpch_waiting_suppliers"]).fetchall()
+        con.execute(ORACLES["tpch_waiting_suppliers"]).fetchall()
     }
     assert oracle == got
 

@@ -14,6 +14,7 @@ in one temp dir, removed on exit.
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
 import shutil
 import subprocess
@@ -27,14 +28,25 @@ sys.path.insert(0, REPO)
 REPEAT = 2
 
 
-def gen_input(path: str, n_turns: int) -> None:
+def _write_input(path: str, n_turns: int) -> None:
     from log_analysis_system_spark.datagen.transcripts import write_transcripts
     from log_analysis_system_spark.session import get_spark
 
     spark = get_spark("scaling-datagen")
     spark.sparkContext.setLogLevel("ERROR")
     write_transcripts(spark, path, n_turns=n_turns, n_convs=max(100, n_turns // 200))
-    spark.stop()
+
+
+def gen_input(path: str, n_turns: int) -> None:
+    """Write the input from a child process: ``spark.stop()`` leaves
+    pyspark's gateway JVM running, and the datagen JVM must not sit beside
+    the pinned trials."""
+    child = multiprocessing.get_context("spawn").Process(
+        target=_write_input, args=(path, n_turns))
+    child.start()
+    child.join()
+    if child.exitcode != 0:
+        raise RuntimeError(f"datagen child exited with code {child.exitcode}")
 
 
 def run_once(cores: int, inp: str, out: str) -> dict:
