@@ -52,8 +52,6 @@ ERROR_GROUPS = ["timestamp", "level", "module", "pid", "message"]
 
 # --- performance thresholds (config/config.yaml:17-20)
 SLOW_ENDPOINT_AVG = 0.5  # seconds
-SLOW_ENDPOINT_P95 = 2.0  # seconds
-HIGH_ERROR_RATE = 0.05
 
 # min requests per endpoint before emitting metrics (performance.py:82)
 MIN_ENDPOINT_SUPPORT = 5
@@ -102,13 +100,11 @@ THREAT_LEVEL_MEDIUM = 10  # security.py:377
 # --- anomaly detection (config/config.yaml:41-44)
 Z_SCORE_THRESHOLD = 3.0
 MIN_DATA_POINTS = 10
-ANOMALY_WINDOW_SIZE = 3600
 ROLLING_WINDOW = 5  # detector.py:82
 ROLLING_MIN_PERIODS = 3  # detector.py:82
 IQR_MULTIPLIER = 1.5  # detector.py:124
 
 # --- alerting (config/config.yaml:47-49)
-MIN_ANOMALIES_FOR_ALERT = 5
 THROTTLE_PERIOD = 3600
 
 # --- status-code descriptions (dashboard.py:205-221)
@@ -164,8 +160,6 @@ class RuntimeConfig:
     re_error: str = RE_ERROR
     # performance thresholds
     slow_endpoint_avg: float = SLOW_ENDPOINT_AVG
-    slow_endpoint_p95: float = SLOW_ENDPOINT_P95
-    high_error_rate: float = HIGH_ERROR_RATE
     min_endpoint_support: int = MIN_ENDPOINT_SUPPORT
     metric_time_window: int = METRIC_TIME_WINDOW
     # security
@@ -184,12 +178,10 @@ class RuntimeConfig:
     # anomaly detection
     z_score_threshold: float = Z_SCORE_THRESHOLD
     min_data_points: int = MIN_DATA_POINTS
-    anomaly_window_size: int = ANOMALY_WINDOW_SIZE
     rolling_window: int = ROLLING_WINDOW
     rolling_min_periods: int = ROLLING_MIN_PERIODS
     iqr_multiplier: float = IQR_MULTIPLIER
     # alerting
-    min_anomalies_for_alert: int = MIN_ANOMALIES_FOR_ALERT
     throttle_period: int = THROTTLE_PERIOD
     # email delivery (config.yaml:52-62 schema; notifier.py consumes it).
     # Disabled by default, exactly like the reference; 'spool_dir' (an
@@ -242,7 +234,9 @@ def load_config(
     missing file / section / key keeps the built-in default.
 
     - ``config_path``: config.yaml schema (performance_thresholds /
-      security / anomaly_detection / alerting sections — config.yaml:17-49)
+      security / anomaly_detection / alerting sections — config.yaml:17-49);
+      the keys no code reads (``slow_endpoint_p95``, ``high_error_rate``,
+      ``window_size``, ``min_anomalies_for_alert``) are ignored
     - ``patterns_path``: patterns.yaml 'apache' section (common_log,
       combined_log, combined_with_time, error_log — named-group regexes,
       converted to positional; group-name order is validated against the
@@ -258,9 +252,8 @@ def load_config(
         with open(config_path, encoding="utf-8") as f:
             raw = yaml.safe_load(f) or {}
         perf = raw.get("performance_thresholds") or {}
-        for key in ("slow_endpoint_avg", "slow_endpoint_p95", "high_error_rate"):
-            if key in perf:
-                overrides[key] = type(getattr(base, key))(perf[key])
+        if "slow_endpoint_avg" in perf:
+            overrides["slow_endpoint_avg"] = float(perf["slow_endpoint_avg"])
         sec = raw.get("security") or {}
         if "attack_patterns" in sec:
             overrides["attack_patterns"] = tuple(sec["attack_patterns"])
@@ -284,11 +277,7 @@ def load_config(
             overrides["z_score_threshold"] = float(anom["z_score_threshold"])
         if "min_data_points" in anom:
             overrides["min_data_points"] = int(anom["min_data_points"])
-        if "window_size" in anom:
-            overrides["anomaly_window_size"] = int(anom["window_size"])
         alert = raw.get("alerting") or {}
-        if "min_anomalies_for_alert" in alert:
-            overrides["min_anomalies_for_alert"] = int(alert["min_anomalies_for_alert"])
         if "throttle_period" in alert:
             overrides["throttle_period"] = int(alert["throttle_period"])
         if raw.get("email"):

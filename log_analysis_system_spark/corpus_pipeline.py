@@ -10,7 +10,9 @@ workloads. Three stages with log-pipeline-matching recovery granularity:
   Gopher rule battery + ``gopher_keep`` verdict, language ID,
   deterministic train/val/test split (the shared expression families
   from ``operators/textstats.py``, so formulas exist once). Sink:
-  ``doc_scores`` (bucket-partitioned, idempotent per-bucket overwrite).
+  ``doc_scores``, written by the route's ``pipeline.write_bucketed`` body
+  (one file per bucket, per-bucket overwrite, counted from the persisted
+  frame: the sink is read only by finalize).
 - **dedup** (global, all-or-nothing — near-dup discovery is global by
   definition: per-bucket components would miss cross-bucket duplicates):
   MinHash/LSH + verify + label-propagation components. Sink:
@@ -44,7 +46,7 @@ from .operators.textstats import (
     quality_keep_expr,
     split_exprs,
 )
-from .pipeline import bucket_of, write_observed
+from .pipeline import bucket_of, bucket_tasks, write_bucketed, write_observed
 from .sources import catalog
 
 # the Gopher signals that aren't already carried by the quality family
@@ -140,25 +142,17 @@ def run_corpus_pipeline(
             scored = score_projection(docs, n_buckets)
             if scored_buckets:
                 scored = scored.where(F.col("bucket").isin(pending))
-            # one shuffle into bucket layout (<=1 file per bucket), same as
-            # the log pipeline's route stage
-            scored = scored.repartition(n_buckets, "bucket")
-            catalog.write_table(
-                scored, output_dir, "doc_scores",
-                partition_cols=["bucket"], mode="overwrite_partitions",
+            # the route's placement and write body: one file per bucket,
+            # counted from the persisted frame, with no sink read-back
+            scored = bucket_tasks(scored, n_buckets)
+            counts, by_bucket = write_bucketed(
+                scored, {"doc_scores": scored}, "doc_scores", output_dir,
+                ["bucket"],
             )
-            # per-bucket counts need a groupBy (Observation is single-row
-            # only); re-reading the pruned text-free sink is far cheaper
-            # than recomputing the tokenize projection a second time
-            counts = st.bucket_counts(
-                catalog.read_table(spark, output_dir, "doc_scores").where(
-                    F.col("bucket").isin(pending)
-                )
-            )
-            result.sink_counts["doc_scores"] = sum(counts.values())
+            result.sink_counts.update(counts)
         st.record_stage(
             spark, output_dir, run_id, "corpus_score", t.wall_ms,
-            {b: counts.get(b, 0) for b in pending},
+            {b: by_bucket.get(b, 0) for b in pending},
         )
         result.stages_ran.append("score")
 

@@ -251,7 +251,6 @@ parse_text_udf = make_parse_udf()
 # ------------------------------------------------------------------- facade
 def parse_transcripts(
     df: DataFrame,
-    text_col: str = "text",
     engine: str = "sql",
     cfg: RuntimeConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
@@ -264,9 +263,9 @@ def parse_transcripts(
     """
     if engine == "pandas":
         udf = parse_text_udf if cfg is DEFAULT_CONFIG else make_parse_udf(cfg)
-        parsed = udf(F.col(text_col))
+        parsed = udf(F.col("text"))
     elif engine == "sql":
-        parsed = _sql_parsed_struct(F.col(text_col), cfg)
+        parsed = _sql_parsed_struct(F.col("text"), cfg)
     else:
         raise ValueError(f"unknown parse engine: {engine}")
     df = df.withColumn("_parsed", parsed)

@@ -14,14 +14,13 @@ engineering the north rule demands:
 
   * ``route`` (per-bucket, resumable bucket-by-bucket): parse + enrich +
     per-ROW detectors (attack/scan patterns — embarrassingly parallel),
-    fanned out to parsed/error/reject sinks and to each detector's
-    severity sink, one persisted frame feeding every sink and each sink
-    counted inside its own write. The body (``route_turns``) is shared
-    with ``streaming_route``, whose micro-batches partition every sink by
-    ``batch_id`` instead of ``bucket`` (one file per sink per input
-    partition, ``bucket`` kept as a column: replay is keyed on
-    ``batch_id``, and per-bucket resume is a batch concern); the batch
-    stage adds only the bucket shuffle and the state rows;
+    written to parsed/error/reject sinks and to each detector's severity
+    sink. The body (``route_turns``) is shared with ``streaming_route``,
+    whose micro-batches partition every sink by ``batch_id`` instead of
+    ``bucket`` (one file per sink per input partition, ``bucket`` kept as
+    a column: replay is keyed on ``batch_id``, and per-bucket resume is a
+    batch concern); the batch stage adds only the bucket shuffle and the
+    state rows;
   * ``aggregate`` (global, all-or-nothing): reads BACK the completed
     parsed_turns sink (never recomputes parse) and reads no other sink.
     It runs the group-by detectors (suspicious IP / brute force / unusual
@@ -33,10 +32,13 @@ engineering the north rule demands:
 - **idempotence**: bucket sinks use dynamic-partition overwrite; rerunning
   a straggler bucket replaces its partition (the reference's rerun story
   appends duplicates — ``database.py:172``);
-- **lineage/metrics**: every sink's row count is observed inside its own
-  write; the route's per-bucket ``parsed_turns`` counts and the
-  aggregate's total sink rows are appended to the checkpointed state
-  table.
+- **one write path**: every stage writes its sinks through
+  ``write_sinks``, one concurrent ``write_observed`` per sink, each row
+  count observed inside its own write. The per-bucket stages (the route,
+  each micro-batch, the corpus score stage) share ``write_bucketed``: one
+  persisted frame, one per-bucket lineage count that fills its cache, then
+  the dynamic-overwrite fan-out. The route's per-bucket ``parsed_turns``
+  counts and the aggregate's total sink rows go to the state table.
 """
 
 from __future__ import annotations
@@ -140,18 +142,12 @@ def _route_stage(
 ) -> None:
     with st.StageTimer() as t:
         # ONE shuffle into bucket layout BEFORE the parse: raw turns are the
-        # narrowest the rows ever are (cheapest point to shuffle) and parse
-        # parallelism is decoupled from the source file layout. Bucket b
-        # lands on task b mod n exactly, n = min(n_buckets, cores): each
-        # task holds whole buckets, so every downstream sink write is narrow
-        # and writes one file per bucket (the parquet analog of Iceberg
-        # bucket(n, conv_id)) while the task count follows the cores. The
-        # bucket is the unit of lineage, resume and files, not of tasks.
-        n_tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
-        parsed_by_bucket = route_turns(
-            bucketed.repartitionById(n_tasks, "bucket"), output_dir,
-            result.sink_counts, n_buckets, cfg,
+        # narrowest the rows ever are, and parse parallelism is decoupled
+        # from the source file layout
+        counts, parsed_by_bucket = route_turns(
+            bucket_tasks(bucketed, n_buckets), output_dir, n_buckets, cfg,
         )
+        result.sink_counts.update(counts)
 
     st.record_stage(
         spark, output_dir, run_id, "route", t.wall_ms,
@@ -159,77 +155,94 @@ def _route_stage(
     )
 
 
+def bucket_tasks(bucketed: DataFrame, n_buckets: int) -> DataFrame:
+    """Bucket ``b`` on task ``b mod n``, ``n = min(n_buckets, cores)``."""
+    n_tasks = min(n_buckets, bucketed.sparkSession.sparkContext.defaultParallelism)
+    return bucketed.repartitionById(n_tasks, "bucket")
+
+
 def route_turns(
     bucketed: DataFrame,
     output_dir: str,
-    sink_counts: dict[str, int],
     n_buckets: int,
     cfg: RuntimeConfig = DEFAULT_CONFIG,
     partition_by: dict[str, Column] | None = None,
-) -> dict[int, int]:
-    """The route body shared by the batch route stage and every streaming
-    micro-batch: parse + enrich + per-row detectors over ``bucketed`` (turns
-    carrying a ``bucket`` column), fanned out to the parsed/error/reject
-    sinks and each detector's severity sink, one persisted frame feeding
-    every sink. ``partition_by`` maps the columns that replace ``bucket``
-    as every sink's partition spec to their values (a micro-batch's
-    ``batch_id``, so each sink writes one file per input partition, not one
-    per bucket); without it the sinks partition by ``bucket``. ``bucket``
-    stays a column of every sink either way. Each sink's row count is
-    observed inside its own write and set in ``sink_counts``; returns the
-    ``parsed_turns`` row count per bucket."""
+) -> tuple[dict[str, int], dict[int, int]]:
+    """The route body of the batch stage and every micro-batch: parse +
+    enrich + per-row detectors over ``bucketed`` (turns with a ``bucket``
+    column), written by :func:`write_bucketed`. ``partition_by`` maps the
+    columns that replace ``bucket`` as the sinks' partition spec to their
+    values (a micro-batch's ``batch_id``: one file per input partition);
+    ``bucket`` stays a column either way. Returns the sink counts and the
+    ``parsed_turns`` rows per bucket."""
     partition_by = partition_by or {}
-    partition_cols = list(partition_by) or ["bucket"]
     enriched = enrich(
         parse_transcripts(bucketed, engine="pandas", cfg=cfg)
     ).withColumns(partition_by)
-    enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        access = enriched.where(F.col("log_type") == "access").drop("ts")
-        # the per-bucket parsed_turns lineage: the one job that also fills
-        # enriched's cache before the concurrent fan-out
-        parsed_by_bucket = st.bucket_counts(access)
-        errors = enriched.where(F.col("log_type") == "error").select(
+    # per-row detectors only (global detectors run in the aggregate stage).
+    # Attack patterns are always high severity and scans always medium, so
+    # each feeds its own sink; no row detector emits low.
+    event_cols = {**partition_by, "bucket": bucket_of("conv_id", n_buckets)}
+    writes = {
+        "parsed_turns": enriched.where(F.col("log_type") == "access").drop("ts"),
+        "error_turns": enriched.where(F.col("log_type") == "error").select(
             *partition_by, "bucket", "conv_id", "turn_idx", "ts_parsed",
             "level", "module", "pid", "message", "text",
-        )
-        rejects = enriched.where(F.col("log_format").isNull()).select(
+        ),
+        "rejects": enriched.where(F.col("log_format").isNull()).select(
             *partition_by, "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
             "text",
+        ),
+        "security_events_high":
+            sec.attack_events(enriched, cfg).withColumns(event_cols),
+        "security_events_medium":
+            sec.scan_events(enriched, cfg).withColumns(event_cols),
+    }
+    return write_bucketed(
+        enriched, writes, "parsed_turns", output_dir,
+        list(partition_by) or ["bucket"],
+    )
+
+
+def write_bucketed(
+    frame: DataFrame,
+    writes: dict[str, DataFrame],
+    lineage: str,
+    output_dir: str,
+    partition_cols: list[str],
+) -> tuple[dict[str, int], dict[int, int]]:
+    """Write the sinks ``writes``, all derived from ``frame``, off one
+    persisted ``frame``: the per-bucket count of ``writes[lineage]`` fills
+    the cache, then every sink dynamic-overwrites its partitions, so a
+    rerun bucket or replayed micro-batch replaces its output. Returns the
+    sink counts and the lineage rows per bucket."""
+    frame.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        by_bucket = st.bucket_counts(writes[lineage])
+        counts = write_sinks(
+            writes, output_dir, partition_cols, mode="overwrite_partitions",
         )
-        # per-row detectors only (global detectors run in the aggregate
-        # stage). Attack patterns are always high severity and scans always
-        # medium, so each feeds its own sink; no row detector emits low.
-        event_cols = {**partition_by, "bucket": bucket_of("conv_id", n_buckets)}
-        writes = {
-            "parsed_turns": access,
-            "error_turns": errors,
-            "rejects": rejects,
-            "security_events_high":
-                sec.attack_events(enriched, cfg).withColumns(event_cols),
-            "security_events_medium":
-                sec.scan_events(enriched, cfg).withColumns(event_cols),
-        }
-
-        # idempotent writes: a rerun bucket (or a replayed micro-batch)
-        # replaces its own partitions
-        def write(name: str, df: DataFrame) -> None:
-            sink_counts[name] = write_observed(
-                df, output_dir, name, partition_cols=partition_cols,
-                mode="overwrite_partitions",
-            )
-
-        # Every sink reads only the persisted frame, so the writes are
-        # independent Spark actions — submit them concurrently and let the
-        # scheduler interleave; each sets a distinct sink_counts key.
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for f in [pool.submit(write, *w) for w in writes.items()]:
-                f.result()  # re-raises the first failure
     finally:
-        # always drop the cache blocks — a failed concurrent sink write
-        # must not leak MEMORY_AND_DISK blocks for the session lifetime
-        enriched.unpersist()
-    return parsed_by_bucket
+        # a failed sink write must not leak cache blocks for the session
+        frame.unpersist()
+    return counts, by_bucket
+
+
+def write_sinks(
+    writes: dict[str, DataFrame],
+    output_dir: str,
+    partition_cols: list[str] | None = None,
+    mode: str = "overwrite",
+) -> dict[str, int]:
+    """Submit one :func:`write_observed` per sink at once (independent Spark
+    actions the scheduler interleaves) and return each sink's row count;
+    re-raises the first failed write."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = {
+            name: pool.submit(write_observed, df, output_dir, name, partition_cols, mode)
+            for name, df in writes.items()
+        }
+    return {name: f.result() for name, f in futures.items()}
 
 
 def write_observed(
@@ -312,28 +325,16 @@ def _aggregate_stage(
             .unionByName(sec.scan_events(parsed, cfg))
         )
 
-        # Independent full-overwrite sinks off the two persisted frames;
-        # concurrent submission lets the scheduler overlap them (cache
-        # blocks are computed once under Spark's block-level locks,
-        # whichever job touches a partition first). ``written`` holds the
-        # rows of this stage's own sinks, the lineage count it records.
-        written: dict[str, int] = {}
-
-        def _observed_to(name: str, df: DataFrame) -> None:
-            written[name] = write_observed(df, output_dir, name)
-
-        writes = [
-            (name, agg_events.where(F.col("severity") == severity))
+        # full-overwrite sinks off the two persisted frames; their total
+        # rows are the lineage count this stage records
+        writes = {
+            name: agg_events.where(F.col("severity") == severity)
             for severity, name in AGG_SINKS_BY_SEVERITY.items()
-        ] + [
-            ("performance_metrics", metrics),
-            ("anomalies", anomalies),
-            ("ip_threat_scores", sec.ip_threat_scores(all_events, cfg)),
-        ]
+        }
+        writes.update(performance_metrics=metrics, anomalies=anomalies,
+                      ip_threat_scores=sec.ip_threat_scores(all_events, cfg))
         try:
-            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                for f in [pool.submit(_observed_to, *w) for w in writes]:
-                    f.result()
+            written = write_sinks(writes, output_dir)
             result.sink_counts.update(written)
 
             high_events = all_events.where(F.col("severity") == "high")

@@ -42,10 +42,13 @@ from .feed import FEED_SCHEMA, PERMISSIVE, serialize_turns, split_feed
 
 NULL_TOKEN = "\\N"
 # read options of the batch and the stream CSV door (the stream door adds
-# multiLine=false and maxFilesPerTrigger)
+# multiLine=false and maxFilesPerTrigger). Every file must open with a header
+# naming the schema's columns: enforceSchema=false checks it, so a headerless
+# file fails the read instead of losing its first record as the header.
 CSV_OPTIONS = {
     **PERMISSIVE,
     "header": True,
+    "enforceSchema": False,
     "escape": '"',
     "nullValue": NULL_TOKEN,
     "emptyValue": "",

@@ -28,6 +28,8 @@ checkpoint dir.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -104,9 +106,8 @@ def read_transcript_stream_csv(
     feeds with embedded newlines belong on the JSONL door, which encodes
     them natively.
 
-    Every drop file needs a header row: the first line of each file is
-    read as the header, so a headerless file silently loses its first
-    record."""
+    Every drop file needs a header row naming the schema's columns: a
+    headerless file fails the query instead of losing its first record."""
     raw = (
         spark.readStream.schema(FEED_SCHEMA)
         .options(
@@ -140,8 +141,7 @@ def streaming_route(
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         route_turns(
             batch_df.withColumn("bucket", bucket_of("conv_id", n_buckets)),
-            output_dir, sink_counts={}, n_buckets=n_buckets, cfg=cfg,
-            partition_by={"batch_id": F.lit(batch_id)},
+            output_dir, n_buckets, cfg, partition_by={"batch_id": F.lit(batch_id)},
         )
 
     return (
@@ -673,19 +673,21 @@ def _write_topk_batch(
 ) -> None:
     """Idempotent per-micro-batch top-k writer (module-level so the retry
     contract is directly testable): rank within each finalized window,
-    keep k, then dynamically overwrite THIS batch_id's partition only —
+    keep k, then dynamically overwrite THIS batch_id's partition of the
+    ``output_dir`` table (through ``catalog.write_table``) only —
     re-running with the same batch_id replaces rather than duplicates."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("window_start").orderBy(F.desc("n_invocations"), "tool")
-    (
+    ranked = (
         batch_df.withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= k)
         .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
+    )
+    base, name = os.path.split(output_dir.rstrip("/"))
+    catalog.write_table(
+        ranked, base or ".", name,
+        partition_cols=["batch_id"], mode="overwrite_partitions",
     )
 
 

@@ -34,16 +34,15 @@ exercises its edge case fails HERE instead of in next round's ADVICE.
 
 from __future__ import annotations
 
-import math
 import re
 from datetime import datetime
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entrymod
+from tools.check_correctness import connect, mismatch
 
 # tables whose presence in an oracle disqualifies the query (the fixture
 # dir only carries documents + embeddings)
@@ -295,26 +294,6 @@ def hostile_events_dir(tmp_path_factory):
     return str(d)
 
 
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return float(v)
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
-def _key(row, cols_order):
-    out = []
-    for i in cols_order:
-        v = _norm(row[i])
-        out.append((v is None, str(type(v)), v) if v is not None else (True, "", ""))
-    return tuple(out)
-
-
 def _doc_emb_queries():
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -341,50 +320,16 @@ def _cross_engine_failures(spark, fixture_dir, tables, names):
     fixture dir; return mismatch descriptions."""
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{fixture_dir}/{t}.parquet')"
-        )
+    con = connect(fixture_dir, tables)
     failures = []
     for name in names:
         try:
             sdf = queries[name](spark, fixture_dir)
-            scols = sorted(sdf.columns)
-            srows = sdf.collect()
+            bad = mismatch(sdf.columns, sdf.collect(), con, oracles[name])
         except Exception as e:  # noqa: BLE001
-            failures.append(f"{name}: spark error: {e}")
-            continue
-        try:
-            atbl = con.execute(oracles[name]).fetch_arrow_table()
-        except Exception as e:  # noqa: BLE001
-            failures.append(f"{name}: duckdb error: {e}")
-            continue
-        dcols_raw = list(atbl.column_names)
-        drows = [
-            tuple(d[c] for c in dcols_raw) for d in atbl.to_pylist()
-        ]
-        dcols = sorted(dcols_raw)
-        if scols != dcols:
-            failures.append(f"{name}: columns {scols} vs {dcols}")
-            continue
-        if len(srows) != len(drows):
-            failures.append(
-                f"{name}: rowcount spark={len(srows)} duck={len(drows)}"
-            )
-            continue
-        s_order = [sdf.columns.index(c) for c in scols]
-        d_order = [dcols_raw.index(c) for c in dcols]
-        smulti = sorted(_key(tuple(r), s_order) for r in srows)
-        dmulti = sorted(_key(tuple(r), d_order) for r in drows)
-        if smulti != dmulti:
-            bad = next(
-                (a, b) for a, b in zip(smulti, dmulti) if a != b
-            )
-            failures.append(
-                f"{name}: value mismatch; first spark={bad[0]} duck={bad[1]}"
-            )
+            bad = f"spark error: {e}"
+        if bad:
+            failures.append(f"{name}: {bad}")
     return failures
 
 

@@ -11,6 +11,7 @@ import json
 import os
 import subprocess
 import sys
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,6 +61,23 @@ performance_thresholds:
     assert cfg.slow_endpoint_avg == 0.1
     got = perf.slow_endpoints(parsed, cfg).select("endpoint").collect()
     assert [r.endpoint for r in got] == ["/slow"]
+
+
+def test_config_yaml_ignores_keys_no_code_reads(tmp_path):
+    """A reference-schema config.yaml still loads with the four keys the
+    engine has no use for, and still applies the ones it reads."""
+    cfg = load_config(_write(tmp_path, "config.yaml", """
+performance_thresholds:
+  slow_endpoint_avg: 0.1
+  slow_endpoint_p95: 9.0
+  high_error_rate: 0.5
+anomaly_detection:
+  window_size: 60
+alerting:
+  min_anomalies_for_alert: 2
+  throttle_period: 60
+"""))
+    assert cfg == replace(DEFAULT_CONFIG, slow_endpoint_avg=0.1, throttle_period=60)
 
 
 def test_config_defaults_when_files_missing_keys(tmp_path):

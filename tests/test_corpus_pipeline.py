@@ -133,6 +133,27 @@ def test_resume_reads_state_once(spark, docs, tmp_path_factory, monkeypatch):
     assert len(calls) == 1
 
 
+def test_score_stage_reads_no_sink_back(spark, docs, tmp_path, monkeypatch):
+    """doc_scores is counted by its own write, not read back: the score
+    stage reads no table, and writes one part file per bucket dir."""
+    reads = []
+    real = catalog.read_table
+
+    def recorded(spark_, base_dir, name, *a, **kw):
+        reads.append(name)
+        return real(spark_, base_dir, name, *a, **kw)
+
+    monkeypatch.setattr(catalog, "read_table", recorded)
+    res = run_corpus_pipeline(spark, docs, str(tmp_path), "c-reads", n_buckets=4,
+                              fail_after_score=True)
+    assert not set(reads) - {"state_metrics"}, reads
+    assert res.sink_counts["doc_scores"] == docs.count()
+    bucket_dirs = sorted((tmp_path / "doc_scores").glob("bucket=*"))
+    assert len(bucket_dirs) == 4
+    for d in bucket_dirs:
+        assert len(list(d.glob("part-*.parquet"))) == 1, d
+
+
 def test_corpus_rejects_buckets_below_one(spark, docs, tmp_path):
     with pytest.raises(ValueError, match="n_buckets"):
         run_corpus_pipeline(spark, docs, str(tmp_path), "c0", n_buckets=0)

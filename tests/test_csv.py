@@ -6,12 +6,17 @@ detection rules (mirrors tests/test_jsonl.py for the fourth front door).
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from log_analysis_system_spark.queries_log import load_transcripts
 from log_analysis_system_spark.sources.csvfile import (
     read_transcripts_csv,
     write_transcripts_csv,
+)
+from log_analysis_system_spark.streaming.stream_pipeline import (
+    read_transcript_stream_csv,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -185,3 +190,27 @@ def test_csv_rejects_raw_is_structured_json(spark, tmp_path):
     #                          # named slots below are positionally safe
     assert d["turn_idx"] == 2 and d["text"] == "orphan, with comma"
     assert d["tool"] == "bash"
+
+
+def test_headerless_csv_fails_loudly_at_both_doors(spark, tmp_path):
+    """A drop file without its header row fails the batch read and the
+    stream query, instead of reading its first record as the header."""
+    p = tmp_path / "feed"
+    p.mkdir()
+    (p / "drop.csv").write_text(
+        "c1,0,user,first,\\N,2024-01-01T00:00:00\n"
+        "c1,1,user,second,\\N,2024-01-01T00:00:01\n"
+    )
+    turns, _ = read_transcripts_csv(spark, str(p))
+    with pytest.raises(Exception, match="CSV header does not conform"):
+        turns.collect()
+
+    q = (
+        read_transcript_stream_csv(spark, str(p)).writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    # the stream's message names the failed file, not the header check
+    with pytest.raises(StreamingQueryException, match="FAILED_READ_FILE.*drop.csv"):
+        q.awaitTermination(300)

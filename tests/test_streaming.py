@@ -219,7 +219,7 @@ def test_streaming_route_sinks_partition_by_batch_id(spark, stream_dirs):
     turns, _ = read_transcripts_jsonl(spark, str(feed / "drop0.jsonl"))
     route_turns(
         turns.withColumn("bucket", bucket_of("conv_id", 32)), out,
-        sink_counts={}, n_buckets=32, partition_by={"batch_id": F.lit(0)},
+        n_buckets=32, partition_by={"batch_id": F.lit(0)},
     )
     after = catalog.read_table(spark, out, "parsed_turns")
     assert after.count() == n_before > 0
@@ -558,6 +558,33 @@ def test_trending_tools_batch_writer_retry_is_idempotent(spark, tmp_path):
         (r.window_start, r.tool, r.n_invocations, r.rank, r.batch_id)
         for r in after.where(F.col("batch_id") == 7).collect()
     ) == once
+
+
+def test_trending_tools_batch_writer_goes_through_the_catalog(
+    spark, tmp_path, monkeypatch
+):
+    """The top-k sink is a catalog table: one dynamic-overwrite write of
+    the batch's ``batch_id`` partition at ``output_dir``."""
+    from log_analysis_system_spark.sources import catalog
+    from log_analysis_system_spark.streaming.stream_pipeline import (
+        _write_topk_batch,
+        windowed_tool_counts,
+    )
+
+    calls = []
+    real = catalog.write_table
+
+    def recorded(df, base_dir, name, **kw):
+        calls.append((base_dir, name, kw))
+        real(df, base_dir, name, **kw)
+
+    monkeypatch.setattr(catalog, "write_table", recorded)
+    counts = windowed_tool_counts(load_transcripts(spark, SF), window="6 hours")
+    _write_topk_batch(counts, 3, str(tmp_path / "topk"), k=2)
+    assert calls == [(str(tmp_path), "topk", {
+        "partition_cols": ["batch_id"], "mode": "overwrite_partitions",
+    })]
+    assert spark.read.parquet(str(tmp_path / "topk")).where("batch_id = 3").count() > 0
 
 
 def test_streaming_jsonl_source_matches_parquet_stream(spark, stream_dirs):

@@ -1,15 +1,15 @@
 """The 13 TPC-H query shapes completing the 22-shape suite (Q2, Q7-Q12,
 Q15-Q17, Q19-Q21), registered in queries_tpch.QUERIES/ORACLES like the
-other nine. Each gets an exact value compare vs DuckDB (the same compare
-the driver runs) at the scale factor where it has a non-degenerate result,
-plus the plan hygiene the whole registry gets in tests/test_plans.py (no
-CartesianProduct; BroadcastNestedLoopJoin only for deliberate 1-row
-scalar-threshold broadcasts).
+other nine. Each gets an exact value compare vs DuckDB
+(``tools/check_correctness.mismatch``, the driver's compare) at the scale
+factor where it has a non-degenerate result, plus the plan hygiene the
+whole registry gets in tests/test_plans.py (no CartesianProduct;
+BroadcastNestedLoopJoin only for deliberate 1-row scalar-threshold
+broadcasts).
 """
 
 from __future__ import annotations
 
-import math
 import re
 from datetime import datetime
 
@@ -17,6 +17,7 @@ import duckdb
 import pytest
 
 from log_analysis_system_spark.queries_tpch import ORACLES, QUERIES
+from tools.check_correctness import connect, mismatch
 
 COMPLETION = [
     "tpch_discounted_revenue",
@@ -54,30 +55,6 @@ BNLJ = re.compile(r"BroadcastNestedLoopJoin")
 BNLJ_ALLOWED = {"tpch_important_parts", "tpch_top_supplier"}
 
 
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else float(v)
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    return v
-
-
-def _oracle_rows(sf_dir: str, sql: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    res = con.execute(sql)
-    cols_raw = [d[0] for d in res.description]
-    cols = sorted(cols_raw)
-    idx = [cols_raw.index(c) for c in cols]
-    return cols, sorted(
-        tuple(_norm(r[i]) for i in idx) for r in res.fetchall()
-    )
-
-
 def test_all_22_tpch_shapes_present():
     names = [n for n in QUERIES if n.startswith("tpch_")]
     assert len(names) == 22
@@ -89,17 +66,10 @@ def test_all_22_tpch_shapes_present():
 def test_extra_tpch_matches_oracle(spark, name):
     sf_dir = SF_OVERRIDE.get(name, SF_SMALL)
     sdf = QUERIES[name](spark, sf_dir)
-    scols = sorted(sdf.columns)
-    srows = sorted(
-        tuple(_norm(r[c]) for c in scols) for r in sdf.collect()
-    )
-    dcols, drows = _oracle_rows(sf_dir, ORACLES[name])
-    assert scols == dcols, f"{name}: columns {scols} != {dcols}"
-    assert srows == drows, (
-        f"{name}: {len(srows)} spark rows != {len(drows)} oracle rows "
-        f"(first spark={srows[:2]}, oracle={drows[:2]})"
-    )
-    assert srows, f"{name}: degenerate empty result"
+    rows = sdf.collect()
+    bad = mismatch(sdf.columns, rows, connect(sf_dir, TABLES), ORACLES[name])
+    assert bad is None, f"{name}: {bad}"
+    assert rows, f"{name}: degenerate empty result"
 
 
 @pytest.mark.parametrize("name", COMPLETION)

@@ -3,7 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB at
 the given sf dir, compares row count, column names, and the order-insensitive
 multiset of row values (exact equality, floats included — stricter than a
-tolerant hash).
+tolerant hash). :func:`connect` and :func:`mismatch` are the one Spark vs
+DuckDB comparator; the oracle tests import them.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -47,6 +48,44 @@ def _key(row, cols_order):
     return tuple(out)
 
 
+def connect(data_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per ``<data_dir>/<table>.parquet``."""
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{data_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def mismatch(columns: list[str], rows: list, con, sql: str) -> str | None:
+    """Compare a Spark result (``df.columns``, ``df.collect()``) with the
+    oracle ``sql`` on ``con`` by column names and the order-insensitive
+    multiset of normalized row values; ``None`` if they agree, else what
+    differs. The oracle is fetched through Arrow, not ``fetchall()``, to
+    keep the driver's typing: DuckDB HUGEINT sums surface as
+    decimal128(38,0) in Arrow while ``fetchall()`` converts them to int."""
+    try:
+        atbl = con.execute(sql).fetch_arrow_table()
+    except Exception as e:  # noqa: BLE001
+        return f"duckdb error: {e}"
+    dcols_raw = list(atbl.column_names)
+    drows = [tuple(d[c] for c in dcols_raw) for d in atbl.to_pylist()]
+    scols, dcols = sorted(columns), sorted(dcols_raw)
+    if scols != dcols:
+        return f"columns {scols} vs {dcols}"
+    if len(rows) != len(drows):
+        return f"rowcount spark={len(rows)} duck={len(drows)}"
+    smulti = sorted(_key(tuple(r), [columns.index(c) for c in scols]) for r in rows)
+    dmulti = sorted(_key(r, [dcols_raw.index(c) for c in dcols]) for r in drows)
+    bad = [(a, b) for a, b in zip(smulti, dmulti) if a != b]
+    if bad:
+        return (f"value mismatch ({len(bad)}/{len(smulti)} rows); "
+                f"first spark={bad[0][0]} duck={bad[0][1]}")
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -55,13 +94,7 @@ def main() -> int:
     from log_analysis_system_spark.session import get_spark
 
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    con = connect(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
@@ -70,52 +103,20 @@ def main() -> int:
             continue
         try:
             sdf = fn(spark, sf_dir)
-            scols = sorted(sdf.columns)
-            srows = sdf.collect()
+            columns, rows = sdf.columns, sdf.collect()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
         if name not in oracles:
-            print(f"weak  {name}: rows-only ({len(srows)} rows)")
+            print(f"weak  {name}: rows-only ({len(rows)} rows)")
             continue
-        try:
-            # Arrow materialization (not fetchall) to mirror the driver's
-            # typing: DuckDB HUGEINT sums surface as decimal128(38,0) in
-            # Arrow while fetchall() silently converts them to Python int —
-            # the round-1 hash-fail class this gate must catch locally.
-            atbl = con.execute(oracles[name]).fetch_arrow_table()
-            dcols_raw = list(atbl.column_names)
-            dpy = atbl.to_pylist()
-            drows = [tuple(d[c] for c in dcols_raw) for d in dpy]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {e}")
+        bad = mismatch(columns, rows, con, oracles[name])
+        if bad:
+            print(f"FAIL  {name}: {bad}")
             failures.append(name)
             continue
-        dcols = sorted(dcols_raw)
-        if scols != dcols:
-            print(f"FAIL  {name}: columns {scols} vs {dcols}")
-            failures.append(name)
-            continue
-        if len(srows) != len(drows):
-            print(f"FAIL  {name}: rowcount {len(srows)} vs {len(drows)}")
-            failures.append(name)
-            continue
-        s_order = [sdf.columns.index(c) for c in scols]
-        d_order = [dcols_raw.index(c) for c in dcols]
-        smulti = sorted(_key(tuple(r), s_order) for r in srows)
-        dmulti = sorted(_key(tuple(r), d_order) for r in drows)
-        if smulti != dmulti:
-            n_bad = sum(1 for a, b in zip(smulti, dmulti) if a != b)
-            print(f"FAIL  {name}: value mismatch ({n_bad}/{len(smulti)} rows)")
-            for a, b in zip(smulti, dmulti):
-                if a != b:
-                    print("   spark:", a)
-                    print("   duck :", b)
-                    break
-            failures.append(name)
-            continue
-        print(f"ok    {name}: {len(srows)} rows")
+        print(f"ok    {name}: {len(rows)} rows")
 
     spark.stop()
     if failures:
